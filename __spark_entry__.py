@@ -317,10 +317,10 @@ def _delq_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
         except FileNotFoundError:
             shutil.rmtree(ddir, ignore_errors=True)
             shutil.copytree(base, ddir)
-        from tantivy_spark.operators.merge import doc_tombstones
         from tantivy_spark.operators.merge import delete_query as _dq
+        from tantivy_spark.operators.merge import has_doc_tombstones
 
-        if not doc_tombstones(spark, ddir):
+        if not has_doc_tombstones(ddir):
             _dq(spark, ddir, L.TermQuery("merge"))
         _SEARCHERS[ddir] = Searcher(spark, ddir)
     return _SEARCHERS[ddir]

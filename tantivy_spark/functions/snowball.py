@@ -6,12 +6,12 @@ Snowball stemming algorithms (https://snowballstem.org/algorithms/).  Each
 function here implements the corresponding *published algorithm
 description* (the prose specs, public since 2001-2006), not a translation
 of any generated code: German, French, Spanish, Italian, Portuguese,
-Russian, Romanian, Dutch, plus the Scandinavian trio (Danish, Norwegian,
-Swedish).  Every stemmer is parity-verified word-for-word against the
-official Snowball implementations (see tests/test_snowball.py); Hungarian
-was attempted and dropped — its per-among boundary semantics differ
-across published snowball revisions and could not be pinned to the
-reference's snapshot.
+Russian, Romanian, Dutch, Hungarian, plus the Scandinavian trio (Danish,
+Norwegian, Swedish).  Every stemmer is parity-verified word-for-word
+against the official Snowball implementations (see tests/test_snowball.py).
+Hungarian's per-among boundary semantics differ across published snowball
+revisions; `stem_hungarian` targets the inventories of the PostgreSQL
+build used as the parity oracle (see its docstring).
 
 English stays in functions/porter2.py (Porter2, 109 parity vectors).
 

@@ -36,6 +36,7 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -112,11 +113,15 @@ def delete_term(spark: SparkSession, index_dir: str, term: str) -> None:
     df.coalesce(1).write.mode("append").parquet(path)
 
 
-def tombstoned_terms(spark: SparkSession, index_dir: str) -> list[str]:
+def tombstoned_terms(index_dir: str) -> list[str]:
+    """Pending delete-term tombstones, distinct and sorted: a driver-side
+    pyarrow read of the tiny tombstone table, no Spark job.  Shared by
+    the distributed Searcher and the serving reader."""
     path = os.path.join(index_dir, TOMBSTONES_DIR)
-    if not os.path.exists(path):
+    if not os.path.isdir(path):
         return []
-    return [r["term"] for r in spark.read.parquet(path).select("term").distinct().collect()]
+    t = pq.read_table(path, columns=["term"])
+    return sorted(set(t.column("term").to_pylist()))
 
 
 TOMBSTONES_DOCS_DIR = "tombstones_docs"
@@ -139,6 +144,14 @@ def tombstones_docs_path(index_dir: str) -> str:
             and os.path.isfile(os.path.join(tmp, _REWRITE_DONE))):
         os.rename(tmp, path)
     return path
+
+
+def has_doc_tombstones(index_dir: str) -> bool:
+    """Cheap no-deletes guard: a filesystem check on the address
+    tombstone table, no Spark job."""
+    p = tombstones_docs_path(index_dir)
+    return os.path.isdir(p) and any(
+        f.endswith(".parquet") for f in os.listdir(p))
 
 
 def delete_by_address(spark: SparkSession, index_dir: str,

@@ -3,11 +3,13 @@
 Spark trace (SURVEY.md §3.2): logical query -> term-bucket partition-pruned
 scan of the postings table (Catalyst pushes `tbucket isin` to directory
 pruning and `term isin` to parquet row-group stats — the term-dict FST
-analogue) -> one tiny stats job for global doc_freqs (the reference computes
-global stats once per query, searcher.rs:133-146, bm25.rs:108-144) ->
-per-segment exact top-k kernel (kernel.py) in applyInPandas -> global merge
-ordered by (score desc, segment_ord asc, doc_id asc) — the reference's
-merge_fruits tie-break (top_score_collector.rs:28-30,648-655).
+analogue) -> global doc_freqs summed on the driver from the terms table's
+per-segment rows, a pruned pyarrow read with no Spark job (the reference
+computes global stats once per query, searcher.rs:133-146,
+bm25.rs:108-144) -> per-segment exact top-k kernel (kernel.py) in
+applyInPandas -> global merge ordered by (score desc, segment_ord asc,
+doc_id asc) — the reference's merge_fruits tie-break
+(top_score_collector.rs:28-30,648-655).
 
 Two execution paths:
 
@@ -24,6 +26,7 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -278,8 +281,6 @@ def _load_segment_postings(index_dir: str, seg: int, terms: list,
     programs) get task-lifetime decode memoization so the batch shares
     their decode — unshared terms stay lazily block-decoded so the
     kernels' BlockWAND cuts keep working."""
-    import pyarrow.parquet as _pq
-
     cols = list(_BATCH_POSTING_COLS)
     if with_positions:
         cols += ["pos_enc", "pos_off"]
@@ -291,12 +292,12 @@ def _load_segment_postings(index_dir: str, seg: int, terms: list,
         bdir = os.path.join(index_dir, "postings", f"tbucket={b}")
         f = os.path.join(bdir, f"seg{seg}.parquet")
         if os.path.isfile(f):
-            tab = _pq.read_table(f, columns=cols,
-                                 filters=[("term", "in", bterms)])
+            tab = pq.read_table(f, columns=cols,
+                                filters=[("term", "in", bterms)])
         elif os.path.isdir(bdir):
-            tab = _pq.read_table(bdir, columns=cols,
-                                 filters=[("term", "in", bterms),
-                                          ("segment_ord", "=", seg)])
+            tab = pq.read_table(bdir, columns=cols,
+                                filters=[("term", "in", bterms),
+                                         ("segment_ord", "=", seg)])
         else:
             continue
         for row in tab.to_pylist():
@@ -314,15 +315,13 @@ def _segment_dead_docs(index_dir: str, seg: int, term_tombs: list,
     alive-bitset complement Searcher.dead_docs_df builds distributed
     (src/fastfield/alive_bitset.rs semantics).  None when nothing is
     dead in this segment."""
-    import pyarrow.parquet as _pq
-
     dead = None
     if has_doc_tombs:
         from tantivy_spark.operators.merge import tombstones_docs_path
 
-        t = _pq.read_table(tombstones_docs_path(index_dir),
-                           columns=["segment_ord", "doc_id"],
-                           filters=[("segment_ord", "=", seg)])
+        t = pq.read_table(tombstones_docs_path(index_dir),
+                          columns=["segment_ord", "doc_id"],
+                          filters=[("segment_ord", "=", seg)])
         if t.num_rows:
             dead = np.unique(np.asarray(t.column("doc_id"), dtype=np.int64))
     if term_tombs:
@@ -391,7 +390,7 @@ def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
 
 def _collect_query_terms(q: L.Query, out: set) -> None:
     """Every literal term a kernel-family query tree references — for
-    `search_batch`'s single-stats-job prefetch.  Unknown node types are
+    `search_batch`'s one-read doc-freq prefetch.  Unknown node types are
     ignored (their `_batch_program` raises later with a clear message)."""
     if isinstance(q, (L.BoostQuery, L.ConstScoreQuery)):
         _collect_query_terms(q.query, out)
@@ -615,7 +614,7 @@ class Searcher(Bm25StatsMixin):
         if self._tombstones is None:
             from tantivy_spark.operators.merge import tombstoned_terms
 
-            self._tombstones = tombstoned_terms(self.spark, self.index_dir)
+            self._tombstones = tombstoned_terms(self.index_dir)
         return self._tombstones
 
     # -- table access -------------------------------------------------------
@@ -674,24 +673,36 @@ class Searcher(Bm25StatsMixin):
         return SnippetGenerator.create(self, query, chain=chain)
 
     def doc_freqs(self, terms: list[str]) -> dict[str, int]:
-        """Global per-term doc freq — one tiny pruned aggregation job (the
-        EnableScoring::Enabled stats pass, searcher.rs:133-146).  Cached
-        per searcher: a Searcher is a pinned manifest snapshot, so term
-        stats are immutable for its lifetime (the reference's Searcher
-        holds its segment list the same way)."""
-        if not terms:
-            return {}
-        missing = [t for t in terms if t not in self._df_cache]
+        """Global per-term doc freq: each live segment's `doc_freq` summed
+        per term (the EnableScoring::Enabled stats pass,
+        searcher.rs:133-146), read on the driver with pyarrow — one
+        `term in` filtered read per touched tbucket directory of the
+        terms table (row groups pruned by term stats), no Spark job.
+        Rows of merged-away segments are skipped; absent terms get 0.
+        Cached per searcher: a Searcher is a pinned manifest snapshot,
+        so term stats are immutable for its lifetime (the reference's
+        Searcher holds its segment list the same way)."""
+        missing = sorted({t for t in terms if t not in self._df_cache})
         if missing:
-            rows = (
-                self.pruned_postings(missing)
-                .groupBy("term")
-                .agg(F.sum("doc_freq").alias("df"))
-                .collect()
-            )
-            got = {r["term"]: int(r["df"]) for r in rows}
+            # indexes built before the terms stage carry the same
+            # (term, segment_ord, doc_freq) rows in the postings table
+            table = TERMS_DIR if self._has_terms_table() else "postings"
+            by_bucket: dict[int, list[str]] = {}
             for t in missing:
-                self._df_cache[t] = got.get(t, 0)
+                self._df_cache[t] = 0
+                by_bucket.setdefault(
+                    term_bucket_py(t, self.cfg.n_term_buckets), []).append(t)
+            for b, bucket_terms in sorted(by_bucket.items()):
+                d = os.path.join(self.index_dir, table, f"tbucket={b}")
+                if not os.path.isdir(d):
+                    continue
+                cols = ["term", "segment_ord", "doc_freq"]
+                tab = pq.read_table(d, columns=cols,
+                                    filters=[("term", "in", bucket_terms)])
+                for t, seg, n in zip(*(tab.column(c).to_pylist()
+                                       for c in cols)):
+                    if seg in self._live_segments:
+                        self._df_cache[t] += n
         return {t: self._df_cache[t] for t in terms}
 
     def doc(self, address: tuple[int, int]) -> dict | None:
@@ -872,14 +883,19 @@ class Searcher(Bm25StatsMixin):
         v = self._node_score(q, seg, did)
         return node(type(q).__name__, v)
 
+    def _has_terms_table(self) -> bool:
+        return bool(self.manifest.get("terms_table") or os.path.exists(
+            os.path.join(self.index_dir, TERMS_DIR)))
+
     def terms_table(self) -> DataFrame | None:
         """The materialized per-segment term dictionary written at build
         time (build.write_terms — the persisted FST analogue), filtered to
         the manifest's live segments; None for pre-terms-table indexes."""
-        path = os.path.join(self.index_dir, TERMS_DIR)
-        if not (self.manifest.get("terms_table") or os.path.exists(path)):
+        if not self._has_terms_table():
             return None
-        return self.spark.read.parquet(path).filter(
+        return self.spark.read.parquet(
+            os.path.join(self.index_dir, TERMS_DIR)
+        ).filter(
             F.col("segment_ord").isin(sorted(self._live_segments))
         )
 
@@ -1143,11 +1159,11 @@ class Searcher(Bm25StatsMixin):
 
     def _compile_batch(self, queries: "list[L.Query]"):
         """Compile a query batch -> (live_programs, all_terms:set,
-        hot:set).  One stats job prefetches every term's doc freq
-        (per-program doc_freqs calls then hit the searcher cache); terms
-        referenced by several programs land in `hot` for task-lifetime
-        decode memoization (unshared terms stay lazy so the kernels'
-        BlockWAND cuts keep working)."""
+        hot:set).  One driver-side terms-table read prefetches every
+        term's doc freq (per-program doc_freqs calls then hit the
+        searcher cache); terms referenced by several programs land in
+        `hot` for task-lifetime decode memoization (unshared terms stay
+        lazy so the kernels' BlockWAND cuts keep working)."""
         pre: set[str] = set()
         for q in queries:
             _collect_query_terms(q, pre)
@@ -1314,11 +1330,9 @@ class Searcher(Bm25StatsMixin):
         """Cheap no-deletes guard (weight.rs count fast-path condition):
         a filesystem check on the tombstone table, no Spark job."""
         if self._has_doc_tombs is None:
-            from tantivy_spark.operators.merge import tombstones_docs_path
+            from tantivy_spark.operators.merge import has_doc_tombstones
 
-            p = tombstones_docs_path(self.index_dir)
-            self._has_doc_tombs = os.path.isdir(p) and any(
-                f.endswith(".parquet") for f in os.listdir(p))
+            self._has_doc_tombs = has_doc_tombstones(self.index_dir)
         return self._has_doc_tombs
 
     def dead_docs_df(self) -> DataFrame | None:

@@ -61,7 +61,7 @@ from tantivy_spark.operators.build import (
     load_manifest,
     term_bucket_py,
 )
-from tantivy_spark.operators.merge import TOMBSTONES_DIR
+from tantivy_spark.operators.merge import tombstoned_terms
 from tantivy_spark.functions.bm25 import Bm25Weight
 from tantivy_spark.functions.fieldnorm import FIELD_NORMS_TABLE
 from tantivy_spark.operators.search import (
@@ -202,12 +202,7 @@ class ServingSearcher(Bm25StatsMixin):
     # -- tombstones (alive-bitset sources, read once per snapshot) ----------
     def _term_tombstones(self) -> list[str]:
         if self._term_tombs is None:
-            p = os.path.join(self.index_dir, TOMBSTONES_DIR)
-            if os.path.isdir(p):
-                t = pq.read_table(p, columns=["term"])
-                self._term_tombs = sorted(set(t.column("term").to_pylist()))
-            else:
-                self._term_tombs = []
+            self._term_tombs = tombstoned_terms(self.index_dir)
         return self._term_tombs
 
     def _memo_put(self, cache: dict, key, value) -> None:

@@ -13,8 +13,13 @@ through operators.build.build_index on a DataFrame directly.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
-from pyspark.sql import SparkSession
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 from tantivy_spark.config import IndexConfig
 from tantivy_spark.operators.build import load_manifest
@@ -82,13 +87,33 @@ class IndexWriter:
     def commit(self) -> int:
         """Publish buffered docs as one new segment; atomic manifest swap."""
         if self._buffer:
-            pdf = pd.DataFrame(self._buffer)
-            df = self.index.spark.createDataFrame(pdf)
+            df = self._typed(
+                self.index.spark.createDataFrame(pd.DataFrame(self._buffer)))
             _append_segment(self.index.spark, df, self.index.index_dir,
                             self.index.cfg)
             self._buffer.clear()
         self._opstamp += 1
         return self._opstamp
+
+    def _typed(self, df: DataFrame) -> DataFrame:
+        """Cast the buffer's columns to the types the docmap already
+        stores (a pyarrow footer read).  Inferred types would otherwise
+        leak into the new segment — plain ints as INT64, an all-None
+        column as null — and a later merge could not read it together
+        with the existing segments.  Before the first commit there is
+        no docmap and inference stands."""
+        path = os.path.join(self.index.index_dir, "docmap")
+        if not os.path.isdir(path):
+            return df
+        stored = ds.dataset(path, format="parquet",
+                            partitioning="hive").schema
+        casts = {}
+        for f in df.schema.fields:
+            if f.name in stored.names:
+                t = from_arrow_type(stored.field(f.name).type)
+                if t != f.dataType:
+                    casts[f.name] = F.col(f"`{f.name}`").cast(t)
+        return df.withColumns(casts) if casts else df
 
     def maybe_merge(self, policy: LogMergePolicy | None = None) -> list[list[int]]:
         """Run the merge policy over the committed segments

@@ -232,3 +232,128 @@ def test_garbage_collect(spark, built):
             spark.read.parquet(os.path.join(built, "postings"))
             .select("segment_ord").distinct().collect()}
     assert segs == {r2["segment_ord"] for r2 in s.docmap().select("segment_ord").distinct().collect()}
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started) via a job group."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{time.time_ns()}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _postings_df_sums(spark, idx, terms):
+    """Oracle: postings doc_freq summed over the manifest's live segments."""
+    import os
+
+    live = [s["segment_ord"] for s in load_manifest(idx)["segments"]]
+    pdf = (spark.read.parquet(os.path.join(idx, "postings"))
+           .select("term", "segment_ord", "doc_freq").toPandas())
+    pdf = pdf[pdf["term"].isin(terms) & pdf["segment_ord"].isin(live)]
+    sums = pdf.groupby("term")["doc_freq"].sum()
+    return {t: int(sums.get(t, 0)) for t in terms}
+
+
+def test_doc_freqs_driver_read_parity(spark, built):
+    """Searcher.doc_freqs reads the terms table on the driver: it equals
+    the live-segment postings sum through append, delete, merge (with the
+    merged-away files still on disk) and delete_term, starts no Spark
+    job, and falls back to the postings table when there is no terms
+    table."""
+    import json
+    import os
+    import shutil
+
+    from tantivy_spark.operators.merge import delete_query
+    from tantivy_spark.writer import Index
+
+    terms = ["common", "w3", "deadbeef", "alive", "filler3", "filler41",
+             "appended", "absentterm"]
+    _, n = _jobs_started(spark, lambda: spark.range(4).count())
+    assert n >= 1                       # the job counter sees jobs
+
+    def check(step):
+        want = _postings_df_sums(spark, built, terms)
+        s = Searcher(spark, built)
+        got, n_jobs = _jobs_started(spark, lambda: s.doc_freqs(terms))
+        assert got == want, step
+        assert n_jobs == 0, step
+        assert got["absentterm"] == 0, step
+        return got
+
+    before = check("build")
+    assert before["common"] == 40 and before["w3"] == 6
+
+    w = Index(spark, built).writer()
+    for i in range(40, 45):
+        w.add_document({"conv_id": f"c{i:03d}", "turn_idx": 0,
+                        "text": f"common w3 appended filler{i}"})
+    w.commit()
+    got = check("append")
+    assert got["common"] == 45 and got["filler41"] == 1
+
+    assert delete_query(spark, built, L.TermQuery("w3")) == 11
+    got = check("delete_query")
+    # deleted docs still count until a merge (tantivy keeps stats)
+    assert got["w3"] == 11
+
+    merge_segments(spark, built)
+    got = check("merge")
+    assert got["w3"] == 0 and got["filler3"] == 0
+    assert got["common"] == 34
+    # the merged-away segments' files are still on disk
+    raw = (spark.read.parquet(os.path.join(built, "terms"))
+           .filter("term = 'filler3'").count())
+    assert raw == 1
+
+    delete_term(spark, built, "deadbeef")
+    s = Searcher(spark, built)
+    tombs, n_jobs = _jobs_started(spark, s.tombstones)
+    assert tombs == ["deadbeef"] and n_jobs == 0
+    check("delete_term")
+
+    # an index without a terms table reads the postings table instead
+    old = f"{built}_no_terms"
+    shutil.copytree(built, old)
+    shutil.rmtree(os.path.join(old, "terms"))
+    man_path = os.path.join(old, "manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    man.pop("terms_table", None)
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    s = Searcher(spark, old)
+    assert s.terms_table() is None
+    got, n_jobs = _jobs_started(spark, lambda: s.doc_freqs(terms))
+    assert got == _postings_df_sums(spark, old, terms)
+    assert n_jobs == 0
+
+
+def test_index_writer_casts_to_stored_types(spark, tmp_root):
+    """Plain-dict docs (Python int turn_idx, tool=None in every doc)
+    committed onto an index built with an INT32 turn_idx and a string
+    tool column merge cleanly with the built segments."""
+    from tantivy_spark.writer import Index
+
+    idx = f"{tmp_root}/typed_writer_{time.time_ns()}"
+    base = spark.createDataFrame(
+        [(f"c{i:03d}", i % 3, f"base text{i}", "grep" if i % 4 == 0 else None)
+         for i in range(24)],
+        "conv_id string, turn_idx int, text string, tool string")
+    build_index(spark, base.repartition(2), idx,
+                IndexConfig(n_segments=2, n_term_buckets=4))
+    w = Index(spark, idx).writer()
+    for i in range(6):
+        w.add_document({"conv_id": f"n{i:03d}", "turn_idx": i,
+                        "text": f"fresh markerone{i % 2}", "tool": None})
+    w.commit()
+    merge_segments(spark, idx)
+    s = Searcher(spark, idx)
+    assert s.total_docs == 30
+    assert s.count(L.TermQuery("fresh")) == 6
+    assert s.count(L.TermQuery("markerone0")) == 3
+    assert s.count(L.TermQuery("base")) == 24

@@ -7,9 +7,10 @@ readers):
   1. spark job-scheduling floor: a no-op `spark.range` count and a
      trivial 1-partition collect — the irreducible per-job cost of the
      distributed path;
-  2. the distributed DAAT top-10 split into its two jobs: the doc-freq
-     stats lookup and the per-segment kernel job (plan build + submit +
-     Arrow round-trip + TakeOrderedAndProject);
+  2. the distributed DAAT top-10 split into the driver-side doc-freq
+     read (pyarrow over the terms table, no Spark job) and the
+     per-segment kernel job (plan build + submit + Arrow round-trip +
+     TakeOrderedAndProject);
   3. ServingSearcher latency: cold (process start: manifest + first
      pruned posting reads) and warm (page-cache posture — repeat query,
      best and median over N).
@@ -72,13 +73,13 @@ def main() -> None:
         "one_partition_collect": round(floor_collect, 4),
     }
 
-    # 2. distributed split: stats job vs kernel job
+    # 2. distributed split: driver-side doc-freq read vs kernel job
     def stats_only():
         s._df_cache.clear()
         s.doc_freqs(["table", "value", "spark"])
 
     stats_sec, _ = _t(stats_only, 5)
-    # with the df cache warm, search() skips the stats job -> kernel only
+    # with the df cache warm, search() skips the doc-freq read -> kernel only
     s.doc_freqs(["table", "value", "spark"])
     kernel_term, _ = _t(lambda: s.search(q_term, 10, "daat").collect(), 5)
     kernel_or3, _ = _t(lambda: s.search(q_or3, 10, "daat").collect(), 5)
@@ -86,7 +87,7 @@ def main() -> None:
         lambda: (s._df_cache.clear(),
                  s.search(q_term, 10, "daat").collect()), 5)
     out["distributed_sec"] = {
-        "doc_freq_stats_job": round(stats_sec, 4),
+        "doc_freq_driver_read": round(stats_sec, 4),
         "kernel_job_term_top10": round(kernel_term, 4),
         "kernel_job_or3_top10": round(kernel_or3, 4),
         "full_term_top10_cold_stats": round(full_term, 4),
