@@ -31,6 +31,8 @@ import numpy as np
 
 DEFAULT_LG_K = 11        # rsd ~= 0.023, the reference's default
 
+_SMALL_M_ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
+
 
 def lg_k_for_rsd(rsd: float) -> int:
     """Smallest lg_k whose HLL standard error 1.04/sqrt(2^lg_k) <= rsd
@@ -110,9 +112,16 @@ class HyperLogLog:
         np.maximum(self.registers, other.registers, out=self.registers)
         return self
 
+    def alpha(self) -> float:
+        """The bias constant of the raw estimate: the published values
+        for m = 16 / 32 / 64 (Flajolet et al. 2007), where the
+        asymptotic 0.7213 / (1 + 1.079/m) is off (0.6757 at m = 16),
+        and that formula from m = 128 on."""
+        return _SMALL_M_ALPHA.get(self.m, 0.7213 / (1.0 + 1.079 / self.m))
+
     def estimate(self) -> float:
         m = float(self.m)
-        alpha = 0.7213 / (1.0 + 1.079 / m)
+        alpha = self.alpha()
         inv = np.ldexp(1.0, -self.registers.astype(np.int64)).sum()
         e = alpha * m * m / inv
         if e <= 2.5 * m:                         # small-range correction

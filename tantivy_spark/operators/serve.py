@@ -3,20 +3,24 @@
 The distributed Searcher (search.py) answers a DAAT top-10 in ~1 s
 regardless of corpus size; the cost is Spark *job scheduling* (two jobs:
 stats + per-segment kernel), not work — BENCH.md's latency breakdown
-measures the floor.  The reference is a library: `Searcher::search` runs in
-the caller's process over mmap'd segment files in milliseconds
-(/root/reference/README.md:34,132; src/reader/mod.rs holds a pinned
-manifest + open segment readers).  This module is that posture over the
-SAME index directory, with zero Spark in the query path:
+measures the floor.  Tantivy is a library: `Searcher::search` runs in
+the caller's process over mmap'd segment files in milliseconds (its
+src/reader/mod.rs holds a pinned manifest + open segment readers).  This
+module is that posture over the SAME index directory, with zero Spark in
+the query path:
 
-* pyarrow reads the queried terms' tbucket files directly — directory-level
-  partition pruning plus row-group pruning on the term column's min/max
-  stats (the term-sorted layout plays the FST role, exactly the pruning the
-  Catalyst plan pushes down);
+* pyarrow reads the postings files of the queried terms' tbucket
+  directly, each file whole and once: the footer's segment_ord range
+  skips files that hold none of the segments still to read, and the
+  term-sorted rows make a term's postings a searchsorted plus a slice
+  (the FST + mmap role);
 * the identical numpy kernels (kernel.py segment_topk / _dismax / _phrase)
   score each segment — bit-identical f32 results to the distributed path;
-* a long-lived ServingSearcher caches decoded posting lists and doc freqs
-  (the mmap-page-cache role), so repeat queries never touch the filesystem.
+* a long-lived ServingSearcher caches posting lists per (term, segment),
+  decoded posting lists and doc freqs (the mmap-page-cache role), so
+  repeat queries never touch the filesystem; reload() keeps the posting
+  lists of unchanged segments, like tantivy's reader reusing the open
+  segment readers of a new searcher.
 
 Scale shape: one process serves one manifest snapshot; per-query cost is
 O(posting bytes of the queried terms), independent of corpus size.  On a
@@ -48,10 +52,14 @@ on the distributed path.
 from __future__ import annotations
 
 import os
+import threading
 import time
+from bisect import bisect_left
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from tantivy_spark.config import IndexConfig
@@ -84,9 +92,101 @@ _POSTING_COLS = [
     "term", "segment_ord", "doc_freq", "doc_enc", "tf_enc", "fnorm_enc",
     "block_last", "block_doc_off", "block_tf_off", "bm_norm_id", "bm_tf",
 ]
+_POS_COLS = ["pos_enc", "pos_off"]
+
+
+def _segment_entries(manifest: dict) -> dict[int, dict]:
+    """segment_ord -> the segment's manifest entry.  The entry, not the
+    ord, names an immutable segment: ords restart at 0 after
+    delete_all_documents, and a reused ord's entry differs (its commit
+    time, counts or merge lineage)."""
+    return {int(s["segment_ord"]): s for s in manifest["segments"]}
+
+
+def _segment_range(md) -> tuple[int, int] | None:
+    """(min, max) segment_ord of a postings file from its footer's
+    row-group statistics; None for a file with no rows.  A file written
+    without statistics gets the widest range, so it is always read."""
+    col = [md.schema.column(j).path
+           for j in range(md.num_columns)].index("segment_ord")
+    stats = [md.row_group(i).column(col).statistics
+             for i in range(md.num_row_groups) if md.row_group(i).num_rows]
+    if not stats:
+        return None
+    if not all(st is not None and st.has_min_max for st in stats):
+        return (-(1 << 62), 1 << 62)
+    return (min(st.min for st in stats), max(st.max for st in stats))
+
+
+def _column_reader(col):
+    """Row r of one postings column as TermPostings.from_row takes it
+    (bytes, int, or a numpy copy of a list entry), without pyarrow's
+    per-row to_pylist (~90 µs for one row of these eleven columns)."""
+    arr = col.combine_chunks()
+    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+        off = arr.offsets.to_numpy()
+        vals = arr.values.to_numpy(zero_copy_only=False)
+        return lambda r: vals[off[r]:off[r + 1]].copy()
+    if pa.types.is_integer(arr.type):
+        vals = arr.to_numpy(zero_copy_only=False)
+        return lambda r: int(vals[r])
+    return lambda r: arr[r].as_py()
+
+
+class _PostingsFile:
+    """One postings file read whole: its rows term-sorted (files are
+    written term-sorted; an unsorted one is sorted once here) and its
+    term column as a numpy array, so finding a term's rows is a
+    searchsorted — the term dictionary + mmap role.  The position
+    columns are read only when a phrase needs them."""
+
+    __slots__ = ("key", "terms", "cols", "pos", "order", "postings",
+                 "nbytes")
+
+    def __init__(self, key: tuple[int, int], table):
+        terms = table.column("term")
+        self.order = None
+        if len(table) > 1 and not pc.all(
+                pc.less_equal(terms[:-1], terms[1:])).as_py():
+            self.order = pc.sort_indices(terms)
+            table = table.take(self.order)
+        self.key = key
+        self.terms = table.column("term").to_numpy(zero_copy_only=False)
+        self.cols = {c: _column_reader(table.column(c))
+                     for c in _POSTING_COLS}
+        self.pos = ({c: _column_reader(table.column(c)) for c in _POS_COLS}
+                    if "pos_enc" in table.column_names else None)
+        self.postings = int(pc.sum(table.column("doc_freq")).as_py() or 0)
+        self.nbytes = table.nbytes
+
+    def add_positions(self, pos) -> None:
+        if self.order is not None:
+            pos = pos.take(self.order)
+        self.pos = {c: _column_reader(pos.column(c)) for c in _POS_COLS}
+        self.nbytes += pos.nbytes
+
+    def rows(self, term: str, with_positions: bool) -> list[dict]:
+        i = int(np.searchsorted(self.terms, term, side="left"))
+        j = int(np.searchsorted(self.terms, term, side="right"))
+        cols = {**self.cols, **self.pos} if with_positions else self.cols
+        return [{c: get(r) for c, get in cols.items()} for r in range(i, j)]
+
 
 class ServingSearcher(Bm25StatsMixin):
-    """Long-lived, Spark-free reader over one index manifest snapshot."""
+    """Long-lived, Spark-free reader over one index manifest snapshot.
+
+    Posting state is kept per immutable segment and per immutable file:
+    `reload()` keeps every (term, segment) posting list whose segment's
+    manifest entry is unchanged, and a postings file is read whole once
+    and then served from memory, so a reload after an append commit
+    reads only the files the commit added.
+
+    Threads: `reload()` and the cache writes of `load_terms` hold one
+    lock, and neither mutates a map a running query iterates — they
+    build new maps and assign them.  A query running across a reload is
+    still not pinned to one snapshot (it may see the old manifest's
+    totals with the new segments' postings); full snapshot pinning is
+    ROADMAP #4."""
 
     # threads only pay on heavy queries: below this many touched postings
     # the per-call GIL/dispatch overhead outweighs the parallel numpy work
@@ -153,9 +253,29 @@ class ServingSearcher(Bm25StatsMixin):
         self._live = sorted(
             int(s["segment_ord"]) for s in self.manifest["segments"]
         )
+        self._live_set = frozenset(self._live)
+        self._seg_entries = _segment_entries(self.manifest)
+        # serializes reload() with the cache writes of load_terms
+        self._lock = threading.Lock()
+        # bumped by every reload that picks up a new manifest
+        self._gen = 0
         self._df_cache: dict[str, int] = {}
         # term -> {segment_ord -> TermPostings}; the page-cache role
         self._tp: dict[str, dict[int, K.TermPostings]] = {}
+        # term -> (generation, positions loaded, segment ords read): a
+        # term is warm when its generation is the current one
+        self._read: dict[str, tuple[int, bool, frozenset[int]]] = {}
+        # postings files read whole, path -> _PostingsFile, FIFO order,
+        # charged their postings against decoded_cache_postings
+        self._files: dict[str, _PostingsFile] = {}
+        self._file_granted = 0
+        self._file_bytes = 0
+        # tbucket dir -> file name -> ((mtime_ns, size), segment_ord
+        # range) of every postings file opened: its footer says which
+        # segments it can hold
+        self._file_segs: dict[str, dict[str, tuple]] = {}
+        self._file_reads = 0
+        self._file_hits = 0
         self._term_tombs: list[str] | None = None
         self._dead: dict[int, np.ndarray] | None = None
         self._vocab_cache: tuple[np.ndarray, np.ndarray] | None = None
@@ -201,9 +321,11 @@ class ServingSearcher(Bm25StatsMixin):
 
     # -- tombstones (alive-bitset sources, read once per snapshot) ----------
     def _term_tombstones(self) -> list[str]:
-        if self._term_tombs is None:
-            self._term_tombs = tombstoned_terms(self.index_dir)
-        return self._term_tombs
+        # a local, not the attribute: a reload may reset it meanwhile
+        tombs = self._term_tombs
+        if tombs is None:
+            tombs = self._term_tombs = tombstoned_terms(self.index_dir)
+        return tombs
 
     def _memo_put(self, cache: dict, key, value) -> None:
         """FIFO-bounded memo insert (dicts preserve insertion order)."""
@@ -218,10 +340,14 @@ class ServingSearcher(Bm25StatsMixin):
         delete-term ops into these bitsets at commit and every scorer
         consults them, index_writer.rs:732).  Mirrors the distributed
         Searcher.dead_docs_df."""
-        if self._dead is None:
+        dead = self._dead
+        if dead is None:
             from tantivy_spark.operators.merge import tombstones_docs_path
 
-            self._dead = {}
+            # built aside and published whole: a concurrent query never
+            # sees it half-filled, and a reload resetting it meanwhile
+            # does not take it from this one
+            dead = {}
             p = tombstones_docs_path(self.index_dir)
             if os.path.isdir(p):
                 t = pq.read_table(p, columns=["segment_ord", "doc_id"])
@@ -230,17 +356,17 @@ class ServingSearcher(Bm25StatsMixin):
                 live = set(self._live)
                 for s in np.unique(segs):
                     if int(s) in live:
-                        self._dead[int(s)] = np.unique(docs[segs == s])
+                        dead[int(s)] = np.unique(docs[segs == s])
             dead_terms = self._term_tombstones()
             if dead_terms:
                 self.load_terms(dead_terms)
                 for t in dead_terms:
                     for seg, tp in self._tp.get(t, {}).items():
                         d = tp.decode_all()[0]
-                        prev = self._dead.get(seg)
-                        self._dead[seg] = (
-                            d if prev is None else np.union1d(prev, d))
-        return self._dead
+                        prev = dead.get(seg)
+                        dead[seg] = d if prev is None else np.union1d(prev, d)
+            self._dead = dead
+        return dead
 
     def _seg_docs(self) -> dict[int, int]:
         """Per-segment doc counts from the manifest (doc ids are dense
@@ -251,51 +377,63 @@ class ServingSearcher(Bm25StatsMixin):
                 for s in self.manifest["segments"]}
         return self._seg_docs_cache
 
-    # -- posting-list load (pruned pyarrow reads + cache) --------------------
+    # -- posting-list load (whole-file reads + caches) ----------------------
     def load_terms(self, terms: list[str],
                    with_positions: bool = False) -> None:
         """Ensure posting lists + doc freqs for `terms` are in memory.
-        One dataset read per touched tbucket directory: file-level pruning
-        by the term `in` filter against parquet row-group stats (the
-        postings files are term-sorted, so min/max prune tightly)."""
+        A term is read only for the live segments it was not yet read
+        for; those are found in the postings files of its tbucket whose
+        footer segment range can hold them, each file read whole once
+        and kept (`_postings_file`)."""
         with_positions = with_positions and self.cfg.positions
-        miss = sorted(
-            t for t in set(terms)
-            if t not in self._tp
-            or (with_positions and any(
-                tp.pos_enc is None for tp in self._tp[t].values()))
-        )
-        if not miss:
-            return
+        gen, read = self._gen, self._read
+        miss = []
+        for t in set(terms):
+            st = read.get(t)
+            if st is None or st[0] != gen or (with_positions and not st[1]):
+                miss.append(t)
+        if miss:
+            with self._lock:
+                self._load_missing(sorted(miss), with_positions)
+
+    def _load_missing(self, terms: list[str], with_positions: bool) -> None:
+        gen, live = self._gen, self._live_set
+        need: dict[str, frozenset[int]] = {}
+        for t in terms:
+            st = self._read.get(t)
+            if st is not None and st[0] == gen and (
+                    st[1] or not with_positions):
+                continue  # another thread loaded it meanwhile
+            want = live if st is None else live - st[2]
+            if with_positions:
+                want = want | {s for s, tp in self._tp.get(t, {}).items()
+                               if tp.pos_enc is None}
+            need[t] = want
         by_bucket: dict[int, list[str]] = {}
-        for t in miss:
+        for t in need:
             by_bucket.setdefault(
                 term_bucket_py(t, self.cfg.n_term_buckets), []).append(t)
-        cols = _POSTING_COLS + (
-            ["pos_enc", "pos_off"]
-            if (with_positions and self.cfg.positions) else [])
-        for t in miss:
-            # re-loading a term (positions upgrade) drops its old
-            # TermPostings — release their decoded-cache grants first
-            for old in self._tp.get(t, {}).values():
-                if old.cache_decoded:
-                    self._decoded_granted -= old.doc_freq
-            self._tp[t] = {}
-            self._df_cache[t] = 0
-        live = set(self._live)
+        found: dict[str, dict[int, K.TermPostings]] = {t: {} for t in need}
         for b, bucket_terms in sorted(by_bucket.items()):
-            d = os.path.join(self.index_dir, "postings", f"tbucket={b}")
-            if not os.path.isdir(d):
+            segs = sorted(set().union(*(need[t] for t in bucket_terms)))
+            if not segs:
                 continue
-            tab = pq.read_table(
-                d, columns=cols,
-                filters=[("term", "in", bucket_terms)],
-            )
-            for row in tab.to_pylist():
-                seg = int(row["segment_ord"])
-                if seg not in live:
-                    continue
-                tp = K.TermPostings.from_row(row)
+            for f in self._bucket_files(b, segs, with_positions):
+                for t in bucket_terms:
+                    for row in f.rows(t, with_positions):
+                        seg = int(row["segment_ord"])
+                        if seg in need[t]:
+                            found[t][seg] = K.TermPostings.from_row(row)
+        for t, want in need.items():
+            old = self._tp.get(t, {})
+            by_seg = {}
+            for seg, tp in old.items():
+                if seg not in want:
+                    by_seg[seg] = tp
+                elif tp.cache_decoded:
+                    # re-read (positions upgrade): release the old grant
+                    self._decoded_granted -= tp.doc_freq
+            for seg, tp in sorted(found[t].items()):
                 # long-lived reader: memoize decoded postings on first use
                 # (the mmap page-cache role; encoded bytes stay the backing
                 # store for positions / space accounting) — granted until
@@ -304,8 +442,87 @@ class ServingSearcher(Bm25StatsMixin):
                         <= self.decoded_cache_postings):
                     tp.cache_decoded = True
                     self._decoded_granted += tp.doc_freq
-                self._tp[row["term"]][seg] = tp
-                self._df_cache[row["term"]] += tp.doc_freq
+                by_seg[seg] = tp
+            # new maps, then the read mark: a warm check that passes
+            # finds the term's postings and df already in place
+            self._tp[t] = by_seg
+            self._df_cache[t] = sum(tp.doc_freq for tp in by_seg.values())
+            self._read[t] = (
+                gen,
+                with_positions or all(tp.pos_enc is not None
+                                      for tp in by_seg.values()),
+                live)
+
+    def _bucket_files(self, b: int, segs: list[int],
+                      with_positions: bool) -> list[_PostingsFile]:
+        """The postings files of tbucket `b` whose footer segment range
+        holds any of `segs` (sorted) — the files of merged-away segments
+        and of segments already read are never opened again."""
+        d = os.path.join(self.index_dir, "postings", f"tbucket={b}")
+        try:
+            with os.scandir(d) as it:
+                entries = sorted(
+                    (e for e in it
+                     if not e.name.startswith(("_", ".")) and e.is_file()),
+                    key=lambda e: e.name)
+        except FileNotFoundError:
+            return []
+        metas = self._file_segs.setdefault(d, {})
+        out = []
+        for e in entries:
+            st = e.stat()
+            key = (st.st_mtime_ns, st.st_size)
+            cached = self._files.get(e.path)
+            if cached is not None and cached.key != key:
+                self._evict_file(e.path)  # rewritten in place
+            meta = metas.get(e.name)
+            pf = None
+            if meta is None or meta[0] != key:
+                pf = pq.ParquetFile(e.path)
+                meta = metas[e.name] = (key, _segment_range(pf.metadata))
+            rng = meta[1]
+            if rng is None:
+                continue
+            i = bisect_left(segs, rng[0])
+            if i < len(segs) and segs[i] <= rng[1]:
+                out.append(self._postings_file(e.path, key, with_positions,
+                                               pf))
+        return out
+
+    def _postings_file(self, path: str, key: tuple[int, int],
+                       with_positions: bool, pf=None) -> _PostingsFile:
+        """The file read whole, from the file cache when it holds it.
+        Files are kept FIFO while their postings fit the
+        decoded_cache_postings budget (encoded, ~1.5 B a posting against
+        ~16 B decoded); past it, or at budget 0, they are read per load."""
+        f = self._files.get(path)
+        if f is not None and (f.pos is not None or not with_positions):
+            self._file_hits += 1
+            return f
+        if pf is None:
+            pf = pq.ParquetFile(path)
+        self._file_reads += 1
+        if f is not None:
+            # cached without positions: read only those columns
+            before = f.nbytes
+            f.add_positions(pf.read(columns=_POS_COLS))
+            self._file_bytes += f.nbytes - before
+            return f
+        f = _PostingsFile(key, pf.read(
+            columns=_POSTING_COLS + (_POS_COLS if with_positions else [])))
+        limit = self.decoded_cache_postings
+        if 0 < f.postings <= limit:
+            while self._file_granted + f.postings > limit and self._files:
+                self._evict_file(next(iter(self._files)))
+            self._files[path] = f
+            self._file_granted += f.postings
+            self._file_bytes += f.nbytes
+        return f
+
+    def _evict_file(self, path: str) -> None:
+        f = self._files.pop(path)
+        self._file_granted -= f.postings
+        self._file_bytes -= f.nbytes
 
     def doc_freqs(self, terms: list[str]) -> dict[str, int]:
         self.load_terms(terms)
@@ -316,42 +533,111 @@ class ServingSearcher(Bm25StatsMixin):
         self.load_terms(terms, with_positions=self.cfg.positions)
         return self
 
+    def stats(self) -> dict:
+        """Cache occupancy against each budget, and the postings-file
+        reads and file-cache hits since this reader opened."""
+        return {
+            "files_cached": len(self._files),
+            "file_postings": self._file_granted,
+            "file_arrow_bytes": self._file_bytes,
+            "file_postings_limit": self.decoded_cache_postings,
+            "decoded_postings": self._decoded_granted,
+            "decoded_postings_limit": self.decoded_cache_postings,
+            "fastfield_values": self._ff_granted,
+            "fastfield_values_limit": self.FASTFIELD_CACHE_VALUES,
+            "file_reads": self._file_reads,
+            "file_cache_hits": self._file_hits,
+        }
+
     def reload(self) -> bool:
         """Re-pin this reader to the index's CURRENT manifest — the
         reference's IndexReader::reload (src/reader/mod.rs; tantivy
-        hands out a new Searcher snapshot, this long-lived reader
-        refreshes in place).  Segment files are immutable once written,
-        but a cached term must re-scan for postings in NEW segments, so
-        the snapshot-keyed caches are dropped when the manifest changed.
-        Deletes don't rewrite the manifest, so the tombstone state is
-        refreshed on every call.  Returns True when a new manifest was
-        picked up."""
-        self._term_tombs = None
-        self._dead = None
-        self._watch_sig = self._manifest_sig()
-        new = load_manifest(self.index_dir)
-        if new == self.manifest:
-            return False
-        self.manifest = new
-        self.cfg = IndexConfig.from_json_dict(new["config"])
-        self.total_docs = int(new["total_docs"])
-        self.total_tokens = int(new["total_tokens"])
-        self.field_tokens = {
-            f: int(v) for f, v in new.get("field_tokens", {}).items()}
-        self.params = Bm25Params(self.cfg.k1, self.cfg.b)
-        self._live = sorted(
-            int(s["segment_ord"]) for s in new["segments"])
-        self._df_cache.clear()
-        self._tp.clear()
-        self._decoded_granted = 0
-        self._vocab_cache = None
-        self._seg_docs_cache = None
-        self._docmap_schema_cache = None
-        self._dm_match_cache.clear()
-        self._exp_cache.clear()
-        self._ff_cache.clear()
-        self._ff_granted = 0
-        return True
+        hands out a new Searcher that reuses the open readers of every
+        unchanged segment, this long-lived reader refreshes in place).
+        Segments and postings files are immutable once written, so the
+        posting lists of every segment whose manifest entry is unchanged
+        are kept, and a cached term later reads only the segments the
+        commit added.  Posting lists of segments that left the manifest
+        are dropped (their decoded-cache grants released).  Cached
+        files that left the postings directory are dropped on every
+        call, as garbage_collect does not rewrite the manifest.  The
+        snapshot's other caches (vocab, expansions, fast fields, docmap
+        matches) are rebuilt on use.  Deletes don't rewrite the
+        manifest, so the tombstone state is refreshed on every call.
+        Returns True when a new manifest was picked up."""
+        with self._lock:
+            self._term_tombs = None
+            self._dead = None
+            self._watch_sig = self._manifest_sig()
+            self._prune_files()
+            new = load_manifest(self.index_dir)
+            if new == self.manifest:
+                return False
+            entries = _segment_entries(new)
+            dropped = {s for s, e in self._seg_entries.items()
+                       if entries.get(s) != e}
+            if dropped:
+                self._drop_segments(dropped)
+            self.manifest = new
+            self.cfg = IndexConfig.from_json_dict(new["config"])
+            self.total_docs = int(new["total_docs"])
+            self.total_tokens = int(new["total_tokens"])
+            self.field_tokens = {
+                f: int(v) for f, v in new.get("field_tokens", {}).items()}
+            self.params = Bm25Params(self.cfg.k1, self.cfg.b)
+            self._live = sorted(entries)
+            self._live_set = frozenset(entries)
+            self._seg_entries = entries
+            self._vocab_cache = None
+            self._seg_docs_cache = None
+            self._docmap_schema_cache = None
+            self._dm_match_cache = {}
+            self._exp_cache = {}
+            self._ff_cache = {}
+            self._ff_granted = 0
+            self._gen += 1
+            return True
+
+    def _drop_segments(self, dropped: set[int]) -> None:
+        """New term maps without the `dropped` segments, assigned in one
+        step: a running query keeps iterating the maps it already has."""
+        tp_maps: dict[str, dict[int, K.TermPostings]] = {}
+        dfs: dict[str, int] = {}
+        read: dict[str, tuple[int, bool, frozenset[int]]] = {}
+        kept_reads: dict[frozenset[int], frozenset[int]] = {}
+        for t, by_seg in self._tp.items():
+            if dropped.isdisjoint(by_seg):
+                tp_maps[t], dfs[t] = by_seg, self._df_cache[t]
+            else:
+                keep = {}
+                for seg, tp in by_seg.items():
+                    if seg not in dropped:
+                        keep[seg] = tp
+                    elif tp.cache_decoded:
+                        self._decoded_granted -= tp.doc_freq
+                tp_maps[t] = keep
+                dfs[t] = sum(tp.doc_freq for tp in keep.values())
+        for t, (g, pos, segs) in self._read.items():
+            # read sets are shared frozensets (one per generation)
+            kept = kept_reads.get(segs)
+            if kept is None:
+                kept = kept_reads[segs] = segs - dropped
+            read[t] = (g, pos, kept)
+        self._tp, self._df_cache, self._read = tp_maps, dfs, read
+
+    def _prune_files(self) -> None:
+        """Forget cached postings files whose path left its tbucket
+        directory (garbage_collect(rewrite_postings=True) replaces them)."""
+        for d, metas in self._file_segs.items():
+            try:
+                gone = metas.keys() - set(os.listdir(d))
+            except FileNotFoundError:
+                gone = set(metas)
+            for name in gone:
+                del metas[name]
+                path = os.path.join(d, name)
+                if path in self._files:
+                    self._evict_file(path)
 
     # -- reference Searcher surface shared with the distributed engine ------
     def expand_fuzzy(self, term: str, distance: int = 1,

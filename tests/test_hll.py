@@ -100,3 +100,23 @@ def test_roundtrip_serialization():
     assert np.array_equal(h2.registers, h.registers)
     with pytest.raises(ValueError, match="power of 2"):
         HyperLogLog.from_array(np.zeros(1000, dtype=np.uint8))
+
+
+@pytest.mark.parametrize("lg_k,alpha", [(4, 0.673), (5, 0.697), (6, 0.709)])
+def test_small_m_alpha_is_published_constant(lg_k, alpha):
+    assert HyperLogLog(lg_k).alpha() == alpha
+
+
+def test_large_m_alpha_is_asymptotic():
+    for lg_k in (7, 11, 18):
+        m = 1 << lg_k
+        assert HyperLogLog(lg_k).alpha() == pytest.approx(
+            0.7213 / (1.0 + 1.079 / m))
+
+
+def test_coarsest_sketch_within_its_rsd():
+    n = 10_000
+    h = HyperLogLog(4)
+    h.add([f"value-{i}" for i in range(n)])
+    rsd = 1.04 / np.sqrt(h.m)
+    assert abs(h.estimate() / n - 1.0) <= rsd

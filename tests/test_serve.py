@@ -124,6 +124,7 @@ def test_serving_warm_then_offline_reads_nothing(built, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("filesystem touched after warm()")
     monkeypatch.setattr(pq, "read_table", boom)
+    monkeypatch.setattr(pq, "ParquetFile", boom)
     for q in (L.TermQuery("w0"),
               L.BooleanQuery.union(["w1", "w2"]),
               L.PhraseQuery(("w0", "w1"))):
@@ -519,3 +520,232 @@ def test_serving_snippets_and_space_usage_match_distributed(spark, built):
     assert g_s.snippet(text).to_html() == g_d.snippet(text).to_html()
     assert (ServingSearcher(built).space_usage()
             == Searcher(spark, built).space_usage())
+
+
+RELOAD_QUERIES = [
+    L.TermQuery("w0"),
+    L.BooleanQuery.union(["w3", "w5", "w11"]),
+    L.BooleanQuery.intersection(["w0", "w2"]),
+    L.DisjunctionMaxQuery((L.TermQuery("w1"), L.TermQuery("w2")), 0.3),
+    L.PhraseQuery(("w0", "w1")),
+]
+
+
+def _top(srv, q, k=K):
+    out = srv.search(q, k)
+    return [(int(s), int(d), np.float32(sc)) for s, d, sc in
+            zip(out["segment_ord"], out["doc_id"], out["score"])]
+
+
+def _files_under(d):
+    """path -> (mtime_ns, size) of the data files under directory `d`."""
+    import os
+
+    out = {}
+    for root, _, names in os.walk(d):
+        for n in names:
+            if not n.startswith(("_", ".")):
+                st = os.stat(os.path.join(root, n))
+                out[os.path.join(root, n)] = (st.st_mtime_ns, st.st_size)
+    return out
+
+
+def test_reload_keeps_unchanged_segments(spark, tmp_root, monkeypatch):
+    """A long-lived reader kept open through appends, a delete, a merge
+    (its orphan files left on disk), a postings garbage collection and a
+    delete_all_documents whose recommit reuses ord 0: after every
+    reload() its top-10 equals a freshly opened reader's, its
+    decoded-cache accounting is exact, and after a commit or a merge it
+    reads no postings file that was on disk before (the posting lists
+    of unchanged segments are kept, and the footer segment range skips
+    files of merged-away segments)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tantivy_spark.operators.merge import (
+        delete_all_documents, garbage_collect, merge_segments,
+    )
+    from tantivy_spark.sources.transcripts import generate_conversations
+    from tantivy_spark.writer import Index
+
+    idx = f"{tmp_root}/serve_reload_{time.time_ns()}"
+    build_index(spark, spark.createDataFrame(transcripts_pdf(60)), idx,
+                IndexConfig(n_segments=4, n_term_buckets=4, positions=True))
+    readers = [ServingSearcher(idx),
+               ServingSearcher(idx, decoded_cache_postings=0)]
+    postings_dir = os.path.join(idx, "postings")
+    opened: list[str] = []
+
+    class RecordingParquetFile(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            opened.append(str(source))
+            super().__init__(source, *a, **kw)
+
+    real_read_table = pq.read_table
+
+    def recording_read_table(source, *a, **kw):
+        # a directory read touches every file under it
+        src = str(source)
+        opened.extend(_files_under(src) if os.path.isdir(src) else [src])
+        return real_read_table(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", RecordingParquetFile)
+    monkeypatch.setattr(pq, "read_table", recording_read_table)
+
+    def check(step):
+        fresh = ServingSearcher(idx)
+        for srv in readers:
+            for q in RELOAD_QUERIES:
+                assert _top(srv, q) == _top(fresh, q), (step, q)
+            granted = sum(tp.doc_freq for by_seg in srv._tp.values()
+                          for tp in by_seg.values() if tp.cache_decoded)
+            assert srv._decoded_granted == granted, step
+
+    file_reads = [0, 0]
+
+    def check_stats(step, new_reads):
+        for n, srv in enumerate(readers):
+            st = srv.stats()
+            assert st["decoded_postings"] == srv._decoded_granted, step
+            assert st["file_postings"] <= st["file_postings_limit"], step
+            assert st["file_reads"] >= file_reads[n] + new_reads, step
+            file_reads[n] = st["file_reads"]
+        assert readers[0].stats()["file_cache_hits"] > 0
+        assert readers[1].stats()["files_cached"] == 0
+        assert readers[1].stats()["decoded_postings"] == 0
+
+    def reload_rereads(changed):
+        """reload() + the queries again after `changed()`: the postings
+        files opened that were on disk, unchanged, before it, and the
+        number of postings files opened."""
+        before = _files_under(postings_dir)
+        changed()
+        opened.clear()
+        for srv in readers:
+            srv.reload()
+            for q in RELOAD_QUERIES:
+                srv.search(q, K)
+        now = _files_under(postings_dir)
+        ours = {p for p in opened if p.startswith(postings_dir)}
+        return (sorted(p for p in ours
+                       if p in before and before[p] == now.get(p)),
+                len(ours))
+
+    check("build")
+    w = Index(spark, idx).writer()
+    first = 1000
+    for c in range(2):
+        def commit():
+            pdf = generate_conversations(np.arange(first + 10 * c,
+                                                   first + 10 * c + 10), 7)
+            for doc in pdf.to_dict("records"):
+                w.add_document(doc)
+            w.commit()
+        rereads, n_opened = reload_rereads(commit)
+        assert rereads == [], f"commit {c}"
+        assert n_opened > 0, f"commit {c}"
+        check(f"commit {c}")
+        check_stats(f"commit {c}", 1)
+
+    delete_query(spark, idx, L.TermQuery("w7"))
+    assert all(srv.reload() is False for srv in readers)
+    check("delete_query")
+    check_stats("delete_query", 0)
+
+    rereads, n_opened = reload_rereads(lambda: merge_segments(spark, idx))
+    assert rereads == [] and n_opened > 0, "merge"
+    check("merge")
+    check_stats("merge", 1)
+
+    garbage_collect(spark, idx, rewrite_postings=True)
+    for srv in readers:
+        srv.reload()
+        assert all(os.path.exists(p) for p in srv._files)
+    check("garbage_collect")
+    check_stats("garbage_collect", 0)
+
+    delete_all_documents(spark, idx)
+    pdf = generate_conversations(np.arange(2000, 2010), 7)
+    for doc in pdf.to_dict("records"):
+        w.add_document(doc)
+    w.commit()
+    for srv in readers:
+        assert srv.reload() is True
+        assert srv._live[0] == 0          # ords restart: ord 0 reused
+    check("delete_all + recommit")
+    check_stats("delete_all + recommit", 1)
+    assert _top(readers[0], L.TermQuery("w0"))
+
+
+def test_concurrent_queries_across_reloads(spark, tmp_root):
+    """Queries on 8 threads while the manifest flips between the
+    snapshots before and after a merge (the merged-away files stay on
+    disk, so both are valid) and every query entry may reload: no query
+    fails on a map that a reload changed under it, and afterwards the
+    reader's decoded-cache accounting is exact and its answers equal a
+    freshly opened reader's."""
+    import json
+    import os
+    import sys
+    import threading
+
+    from tantivy_spark.operators.build import MANIFEST_NAME, load_manifest
+    from tantivy_spark.operators.merge import merge_segments
+
+    idx = f"{tmp_root}/serve_threads_{time.time_ns()}"
+    build_index(spark, spark.createDataFrame(transcripts_pdf(60)), idx,
+                IndexConfig(n_segments=4, n_term_buckets=4))
+    before = load_manifest(idx)
+    merge_segments(spark, idx, [0, 1])
+    after = load_manifest(idx)
+    path = os.path.join(idx, MANIFEST_NAME)
+
+    def publish(man):
+        with open(path + ".tmp", "w") as f:
+            json.dump(man, f)
+        os.replace(path + ".tmp", path)
+
+    queries = [q for q in RELOAD_QUERIES if not isinstance(q, L.PhraseQuery)]
+    queries += [L.TermQuery(f"w{i}") for i in range(3, 40, 3)]
+    srv = ServingSearcher(idx, reload_policy="on_commit", reload_delay=0.0)
+    errors: list[BaseException] = []
+    stop = threading.Event()
+
+    def serve():
+        try:
+            while not stop.is_set():
+                for q in queries:
+                    srv.search(q, K)
+        except BaseException as e:  # reported by the main thread
+            errors.append(e)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    threads = [threading.Thread(target=serve) for _ in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        deadline = time.monotonic() + 3.0
+        flips = 0
+        while time.monotonic() < deadline and not errors:
+            publish(after if flips % 2 == 0 else before)
+            srv.reload()
+            flips += 1
+            time.sleep(0.005)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(old_interval)
+        publish(after)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert flips > 10
+    srv.reload()
+    granted = sum(tp.doc_freq for by_seg in srv._tp.values()
+                  for tp in by_seg.values() if tp.cache_decoded)
+    assert srv._decoded_granted == granted
+    fresh = ServingSearcher(idx)
+    for q in queries:
+        assert _top(srv, q) == _top(fresh, q), q

@@ -13,7 +13,13 @@ readers):
      TakeOrderedAndProject);
   3. ServingSearcher latency: cold (process start: manifest + first
      pruned posting reads) and warm (page-cache posture — repeat query,
-     best and median over N).
+     best and median over N);
+  4. serving after a commit, on a scratch copy of the index (the
+     caller's index is never written): one IndexWriter commit of 200
+     source documents, the reader's reload(), then one term and one
+     OR-3 query over terms read before the commit, each timed once,
+     with the postings-file reads each caused (ServingSearcher.stats()):
+     only files of the commit's new segments should be read.
 
 Usage:  python tools/latency_breakdown.py [sf_dir]   (default sf0.1)
 Prints one JSON document.
@@ -41,6 +47,58 @@ def _t(fn, n=1):
     return best, samples
 
 
+def _after_commit(spark, index_dir: str, sf_dir: str, q_term, q_or3) -> dict:
+    """Leg 4: reload + the first queries after an append commit, run on
+    a copy of `index_dir` in a temporary directory."""
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+    from tantivy_spark.operators.serve import ServingSearcher
+    from tantivy_spark.writer import Index
+
+    scratch = tempfile.mkdtemp(prefix="latency_breakdown_")
+    try:
+        copy = os.path.join(scratch, "index")
+        shutil.copytree(index_dir, copy)
+        srv = ServingSearcher(copy)
+        srv.search(q_term, 10)   # the queried terms are read before
+        srv.search(q_or3, 10)    # the commit
+        docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                             columns=["doc_id", "text", "lang", "source",
+                                      "n_chars"]).slice(0, 200).to_pylist()
+        segs_before = len(srv._live)
+        w = Index(spark, copy).writer()
+        for d in docs:
+            w.add_document({
+                "ext_id": d["doc_id"] + 10**12, "text": d["text"],
+                "lang": d["lang"], "source": d["source"],
+                "n_chars": d["n_chars"],
+                "facet": f"/{d['lang']}/{d['source']}"})
+        commit_sec, _ = _t(w.commit)
+
+        def timed(fn):
+            reads = srv.stats()["file_reads"]
+            sec, _ = _t(fn)
+            return sec, srv.stats()["file_reads"] - reads
+
+        reload_sec, reload_reads = timed(srv.reload)
+        term_sec, term_reads = timed(lambda: srv.search(q_term, 10))
+        or3_sec, or3_reads = timed(lambda: srv.search(q_or3, 10))
+        return {
+            "commit_sec": round(commit_sec, 4),
+            "reload_ms": round(reload_sec * 1e3, 3),
+            "cold_term_top10_ms": round(term_sec * 1e3, 3),
+            "cold_or3_top10_ms": round(or3_sec * 1e3, 3),
+            "file_reads": {"reload": reload_reads, "term": term_reads,
+                           "or3": or3_reads},
+            "segments_before_commit": segs_before,
+            "segments_after_commit": len(srv._live),
+        }
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from tantivy_spark.session import get_spark
@@ -49,7 +107,8 @@ def main() -> None:
     from tantivy_spark.operators.serve import ServingSearcher
 
     out: dict = {"sf_dir": sf_dir}
-    spark = get_spark(cores=32, shuffle_partitions=32)
+    nproc = os.cpu_count() or 1
+    spark = get_spark(cores=nproc, shuffle_partitions=nproc)
 
     s = E._searcher(spark, sf_dir)            # builds once / opens cache
     out["index_dir"] = s.index_dir
@@ -121,6 +180,10 @@ def main() -> None:
         "cold_phrase_top10": round(cold_phrase, 4),
         "warm_ms": warm,
     }
+
+    # 4. serving after a commit (scratch copy of the index)
+    out["serving_after_commit"] = _after_commit(
+        spark, s.index_dir, sf_dir, q_term, q_or3)
 
     # parity spot check (cheap insurance in the same run)
     a = srv.search(q_or3, 10)
