@@ -11,6 +11,9 @@ from __future__ import annotations
 import json
 from dataclasses import asdict, dataclass, field
 
+#: keys older manifests carry for options that no longer exist
+_RETIRED_KEYS = ("postings_mode", "tokenize_engine")
+
 
 @dataclass(frozen=True)
 class IndexConfig:
@@ -55,20 +58,6 @@ class IndexConfig:
     #: in the manifest, so scoped-term BM25 uses the field's avgdl exactly
     #: like the reference's per-field statistics (bm25.rs:33-51).
     extra_fields: tuple[str, ...] = ()
-    #: stage-2 dataflow — all three produce byte-identical posting rows:
-    #: "segment" (default): one task per segment with direct pyarrow file
-    #:   IO (tantivy's per-thread SegmentWriter shape) — zero shuffles,
-    #:   zero JVM<->Python IPC, lineage collected in-pass; needs the index
-    #:   dir reachable from executors (local fs / NFS / object store).
-    #: "local": the same per-segment dataflow through Catalyst
-    #:   groupBy + applyInArrow — for storage pyarrow can't reach.
-    #: "salted": shuffle partial-aggregated (term, doc) rows by
-    #:   (segment, term-shard) — finer tasks, the fallback when segments
-    #:   are too large for one task.
-    #: Segment count must give enough tasks to fill the cluster, and one
-    #: segment's docmap batch must fit a task (size via n_segments;
-    #: ~1-2M docs/segment at production scale).
-    postings_mode: str = "segment"
     #: index sorting (IndexSettings::sort_by_field, src/index/
     #: index_meta.rs:288-398): (field, "asc"|"desc") orders docs within
     #: each segment by that fast-field value, enabling early termination
@@ -76,27 +65,21 @@ class IndexConfig:
     #: key_cols order.  key_cols remain the tiebreak either way, so the
     #: assignment stays deterministic.
     sort_by_field: tuple[str, str] | None = None
-    #: tokenize stage dataflow: True (default) uses the hot-path engine
-    #: below whenever tokenizer="default"; False forces the
-    #: vectorized-pandas path (the parity oracle).  Non-default
-    #: tokenizers always use the pandas path.
+    #: True (default) tokenizes the default chain with the vectorized
+    #: numpy kernel over Arrow buffers (functions/arrow_tokenize.py, parity
+    #: pinned by tests/test_arrow_tokenize.py); False forces the
+    #: vectorized-pandas analyzer (the parity oracle) on the default
+    #: chain too.  Non-default tokenizers always use the pandas analyzer.
+    #: (The name predates the kernel; it no longer has anything to do
+    #: with the JVM.)
     jvm_tokenize: bool = True
-    #: hot-path engine when jvm_tokenize applies: "arrow" (default) runs
-    #: the vectorized numpy kernel over raw Arrow buffers in a mapInArrow
-    #: stage (functions/arrow_tokenize.py — ~12x the per-core throughput
-    #: of either regex engine, parity pinned by tests/test_arrow_tokenize;
-    #: handles single/multi field, with and without positions); "jvm"
-    #: keeps the pure-Catalyst regexp path (zero Python workers —
-    #: single/multi field, no positions; positions fall back to pandas).
-    tokenize_engine: str = "arrow"
     #: how documents are assigned to segments:
-    #: "auto" (default): resolve to "input" whenever the config allows the
-    #:   fused shuffle-free pass (postings_mode="segment",
-    #:   tokenizer="default", jvm_tokenize=True, tokenize_engine="arrow"
-    #:   — the defaults), else "hash".  jvm_tokenize=False forces the
-    #:   vectorized-pandas analyzer, which the fused arrow-kernel pass
-    #:   cannot honor, so auto falls back to "hash" there.  The resolved
-    #:   mode is what the manifest records.
+    #: "auto" (default): resolve to "input" whenever the arrow kernel
+    #:   applies (`uses_arrow_kernel`: tokenizer="default" and
+    #:   jvm_tokenize=True — the defaults), else "hash".
+    #:   jvm_tokenize=False forces the vectorized-pandas analyzer, which
+    #:   the fused arrow-kernel pass cannot honor, so auto falls back to
+    #:   "hash" there.  The resolved mode is what the manifest records.
     #:   Rationale: "input" is the measured at-scale dataflow (BENCH.md:
     #:   ~0.87-0.99 scaling efficiency, ~170 MB/s at 32 cores vs "hash"'s
     #:   0.43 / ~16 MB/s through its raw-text exchange+sort) — the default
@@ -117,10 +100,9 @@ class IndexConfig:
     #:   fixed) and is by construction independent of executor count —
     #:   the 100-TB shape: n_segments/segment_col are ignored, segment
     #:   size is bounded by the split size instead of corpus/n_segments.
-    #:   Requires postings_mode="segment", tokenizer="default",
-    #:   tokenize_engine="arrow".  Query results are identical to "hash"
-    #:   builds (scores use global manifest stats; only the physical
-    #:   layout differs).
+    #:   Requires `uses_arrow_kernel()`.  Query results are identical
+    #:   to "hash" builds (scores use global manifest stats; only the
+    #:   physical layout differs).
     segment_assignment: str = "auto"
 
     def resolved_segment_assignment(self) -> str:
@@ -128,11 +110,15 @@ class IndexConfig:
         with; "hash"/"input" pass through."""
         if self.segment_assignment != "auto":
             return self.segment_assignment
-        fused_ok = (self.postings_mode == "segment"
-                    and self.tokenizer == "default"
-                    and self.jvm_tokenize
-                    and self.tokenize_engine == "arrow")
-        return "input" if fused_ok else "hash"
+        return "input" if self.uses_arrow_kernel() else "hash"
+
+    def uses_arrow_kernel(self) -> bool:
+        """True when the default chain is tokenized by the arrow kernel —
+        the one condition for the fused input pass, the direct builds,
+        the direct-IO docmap stage and the fused append commit.  Every
+        other config runs the pandas analyzer."""
+        return self.tokenizer == "default" and self.jvm_tokenize
+
     k1: float = 1.2
     b: float = 0.75
     #: per-field BM25 overrides, ((field, k1, b), ...) — the reference's
@@ -162,7 +148,14 @@ class IndexConfig:
 
     @staticmethod
     def from_json(s: str) -> "IndexConfig":
-        d = json.loads(s)
+        return IndexConfig.from_json_dict(json.loads(s))
+
+    @staticmethod
+    def from_json_dict(d: dict) -> "IndexConfig":
+        """The config a manifest records.  Keys of retired options are
+        dropped: both only chose between dataflows that wrote identical
+        postings, so an index that recorded them reads as-is."""
+        d = {k: v for k, v in d.items() if k not in _RETIRED_KEYS}
         d["key_cols"] = tuple(d["key_cols"])
         d["extra_fields"] = tuple(d.get("extra_fields", ()))
         d["field_bm25"] = tuple(

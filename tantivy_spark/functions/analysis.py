@@ -384,78 +384,6 @@ def _tokenize_default_terms(text: str) -> list[str]:
     return out
 
 
-# ---------------------------------------------------------------------------
-# JVM-side default analyzer (Catalyst expressions, whole-stage codegen)
-# ---------------------------------------------------------------------------
-
-#: Codepoints CPython (Unicode 15) classes as alphanumeric but Java 17
-#: (Unicode 13) does not — measured empirically over every codepoint
-#: (tools/probe_jvm_tokenize.py; 525 cps, all added to Unicode post-13:
-#: Arabic Extended-B, Latin Ext-F/G, Old Uyghur, Cypro-Minoan, Tangsa,
-#: Kana Ext-B, CJK Ext ...).  Added explicitly to the Java character
-#: class so the JVM tokenizer matches the Python parity oracle exactly.
-#: The reverse set (Java-only) is empty, and per-char lowercase parity
-#: (after the final-sigma translate guard) is exact — same probe.
-_JVM_CLASS_PATCH_RANGES = (
-    (0x870, 0x887), (0x889, 0x88E), (0x8B5, 0x8B5), (0x8C8, 0x8C9),
-    (0xC5D, 0xC5D), (0xCDD, 0xCDD), (0x170D, 0x170D), (0x171F, 0x171F),
-    (0x1B4C, 0x1B4C), (0x2C2F, 0x2C2F), (0x2C5F, 0x2C5F), (0x9FFD, 0x9FFF),
-    (0xA7C0, 0xA7C1), (0xA7D0, 0xA7D1), (0xA7D3, 0xA7D3), (0xA7D5, 0xA7D9),
-    (0xA7F2, 0xA7F4), (0x10570, 0x1057A), (0x1057C, 0x1058A),
-    (0x1058C, 0x10592), (0x10594, 0x10595), (0x10597, 0x105A1),
-    (0x105A3, 0x105B1), (0x105B3, 0x105B9), (0x105BB, 0x105BC),
-    (0x10780, 0x10785), (0x10787, 0x107B0), (0x107B2, 0x107BA),
-    (0x10F70, 0x10F81), (0x11071, 0x11072), (0x11075, 0x11075),
-    (0x11740, 0x11746), (0x11AB0, 0x11ABF), (0x12F90, 0x12FF0),
-    (0x16A70, 0x16ABE), (0x16AC0, 0x16AC9), (0x1AFF0, 0x1AFF3),
-    (0x1AFF5, 0x1AFFB), (0x1AFFD, 0x1AFFE), (0x1B11F, 0x1B122),
-    (0x1DF00, 0x1DF1E), (0x1E290, 0x1E2AD), (0x1E7E0, 0x1E7E6),
-    (0x1E7E8, 0x1E7EB), (0x1E7ED, 0x1E7EE), (0x1E7F0, 0x1E7FE),
-    (0x2A6DE, 0x2A6DF), (0x2B735, 0x2B738),
-)
-
-
-def jvm_default_token_pattern() -> str:
-    """Java-regex equivalent of the Python `[^\\W_]+` token class.
-
-    Base class `\\p{L}\\p{N}` (Rust `char::is_alphanumeric` ≈ Python
-    isalnum) + the Unicode-version-skew patch ranges above.  Parity is
-    pinned per-codepoint by tools/probe_jvm_tokenize.py and
-    tests/test_jvm_tokenize.py.
-    """
-    patches = "".join(
-        f"\\x{{{a:X}}}-\\x{{{b:X}}}" if a != b else f"\\x{{{a:X}}}"
-        for a, b in _JVM_CLASS_PATCH_RANGES
-    )
-    return f"[\\p{{L}}\\p{{N}}{patches}]+"
-
-
-def default_terms_jvm(col):
-    """The `default` analyzer as a pure Catalyst expression (no Python in
-    the hot path): SimpleTokenizer -> RemoveLong(40 utf-8 bytes, checked
-    BEFORE lowercasing) -> per-char lowercase.
-
-    JVM `lower()` applies Java's one conditional mapping (Greek final
-    sigma) which the reference's per-char LowerCaser explicitly skips
-    (lower_caser.rs:43-60) — neutralized by translating Σ->σ first, so
-    the capital sigma never reaches the context rule and genuine
-    pre-existing ς codepoints pass through unchanged, exactly like the
-    per-char path.  All other Java lowercase mappings are per-char
-    identical to CPython's str.lower (measured per codepoint).
-
-    Returns a Column of array<string>; null text -> empty array.
-    """
-    from pyspark.sql import functions as F
-
-    toks = F.regexp_extract_all(
-        F.coalesce(col, F.lit("")),
-        F.lit(jvm_default_token_pattern()),
-        F.lit(0),
-    )
-    kept = F.filter(toks, lambda t: F.octet_length(t) < F.lit(DEFAULT_LONG_LIMIT))
-    return F.transform(kept, lambda t: F.lower(F.translate(t, "Σ", "σ")))
-
-
 def analyze_series(texts: pd.Series, tokenizer: str = "default") -> pd.Series:
     """Vectorized (Arrow-batch) analysis: Series[str] -> Series[list[str]].
 

@@ -52,36 +52,6 @@ def fieldnorm_to_id(fieldnorm: int | np.ndarray) -> np.ndarray | int:
     return ids.astype(np.uint8)
 
 
-def fieldnorm_id_col(token_count):
-    """`fieldnorm_to_id` as a pure Catalyst expression (the JVM tokenize
-    path's companion — no Python in the docmap stage).
-
-    Closed form of the table inverse (code.rs:13-259): counts < 32 are
-    the identity (ids 0..23 identity region + mantissa values 24..31);
-    above that the table entry is 24 + (mantissa|8)<<(shift-1), so
-      n     = count - 24
-      shift = bit_length(n) - 3        (exact via conv(n, 10, 2))
-      bits  = (n >> (shift-1)) - 8     (truncation = round-down)
-      id    = 24 + 8*shift + bits, capped at 255.
-    bit_length uses the base-2 string length from `conv` instead of
-    floor(log2) to avoid float boundary error at powers of two.
-    Parity vs the numpy searchsorted pinned in tests/test_jvm_tokenize.py.
-    """
-    from pyspark.sql import functions as F
-
-    tc = token_count.cast("long")
-    n = tc - F.lit(24)
-    bl = F.length(F.conv(n.cast("string"), 10, 2)).cast("long")
-    shift = bl - F.lit(3)
-    bits = F.floor(
-        n / F.pow(F.lit(2.0), (shift - F.lit(1)).cast("double"))
-    ).cast("long") - F.lit(8)
-    fid = F.lit(24) + shift * F.lit(8) + bits
-    return (
-        F.when(tc < F.lit(32), tc).otherwise(F.least(fid, F.lit(255)))
-    ).cast("int")
-
-
 def id_to_fieldnorm(fieldnorm_id: int | np.ndarray) -> np.ndarray | int:
     """Quantized byte id -> decoded fieldnorm (table lookup, code.rs:2-4)."""
     if np.isscalar(fieldnorm_id) or np.ndim(fieldnorm_id) == 0:

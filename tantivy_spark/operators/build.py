@@ -9,27 +9,36 @@ segment_updater.rs:511).
 
 Spark-first mapping (NOT a port — see SURVEY.md §3.1):
 
-  stage 1 ``docmap``   tokenize once (vectorized Arrow UDF), assign each doc
-                       a dense per-segment doc_id by the stable
+  stage 1 ``docmap``   tokenize once (vectorized Arrow kernel, or the
+                       pandas analyzer for non-default chains), assign
+                       each doc a dense per-segment doc_id by the stable
                        (conv_id, turn_idx) order, quantize fieldnorms.
                        Written partitioned by segment_ord — the per-segment
                        "segment files" and the tokenize checkpoint.
-  stage 2 ``postings`` explode terms -> partial-aggregated (term, doc) tf
-                       counts -> shuffle by (segment_ord, term-shard) ->
-                       block-encode per term with numpy -> term-bucket
-                       partitioned parquet, sorted by term within files
-                       (parquet min/max stats play tantivy's term-dict FST
-                       role; the tbucket dir plays term partition pruning).
+  stage 2 ``postings`` one task per segment reads its docmap partition,
+                       encodes ALL of the segment's postings in one
+                       vectorized pass (`_encode_segment_arrow`: rank-code
+                       terms, lexsort (term, doc), 128-doc block encode)
+                       and writes them as term-bucket files
+                       ``tbucket=B/seg<ord>.parquet``, term-sorted (parquet
+                       min/max stats play tantivy's term-dict FST role;
+                       the tbucket dir plays term partition pruning),
+                       plus the segment's slice of the term dictionary.
+                       The build, the append commit and the merge all
+                       write postings through this one encoder
+                       (`_encode_write_segment`), like tantivy's
+                       SegmentWriter -> PostingsSerializer, whose merger
+                       reuses the same serializer.
   stage 3 ``manifest`` per-segment lineage/metrics + global stats + config,
                        written LAST — the atomic-meta.json commit protocol
                        (ARCHITECTURE.md:53).
 
-Skew strategy (north-rule requirement): the shuffle key is
-(segment_ord, term_shard). A Zipf-hot term's postings are bounded per
-reducer by the *segment* size, because a segment contributes at most one
-posting per doc — segments are the salt, sized by ``n_segments``.  At
-10^12 turns: n_segments ≈ corpus/2M docs, n_term_buckets 256+, and AQE
-handles residual imbalance.
+Skew strategy (north-rule requirement): segments are the salt.  A
+Zipf-hot term gets exactly one encoded row per (term, segment), and a
+segment contributes at most one posting per doc, so no task ever holds
+more than one segment's worth of one term; the postings step has no
+shuffle at all.  At 10^12 turns: n_segments ≈ corpus/2M docs (or the
+input split size bounds a segment), n_term_buckets 256+.
 
 Resumability: each stage writes its table idempotently (overwrite) and then
 drops a ``_done_<stage>`` marker; ``build_index(resume=True)`` skips stages
@@ -80,88 +89,19 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-#: UDF-output schema: POSTINGS_SCHEMA minus tbucket — the bucket is a
-#: JVM-side crc32 expression added after the encode (the Python kernel
-#: never hashes term strings).
+#: encoded-row schema: POSTINGS_SCHEMA minus tbucket — the bucket is the
+#: partition directory each row is written under.
 POSTINGS_ENC_SCHEMA = T.StructType(
     [f for f in POSTINGS_SCHEMA.fields if f.name != "tbucket"]
 )
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
-    """Driver-side term -> partition bucket; must equal the Spark-side
-    crc32-based expression used at write time (java.util.zip.CRC32 == zlib)."""
+    """Driver-side term -> partition bucket; must equal the crc32 the
+    segment encoder buckets its rows by at write time."""
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % n_buckets
-
-
-def _term_bucket_col(term_col, n_buckets: int):
-    return F.pmod(F.crc32(term_col.cast("binary")), F.lit(n_buckets)).cast("int")
-
-
-def _tokenize_jvm(base: DataFrame, text_col: str,
-                  extra_fields: tuple[str, ...]) -> DataFrame:
-    """Stage-1 tokenize as pure Catalyst expressions (default analyzer, no
-    positions): regexp_extract_all token split + octet_length RemoveLong +
-    lower — whole-stage codegen, zero Python workers in the docmap stage.
-    Output columns match the pandas path exactly (parity pinned by
-    tests/test_jvm_tokenize.py); the pandas analyzer remains the parity
-    oracle and serves every non-default chain.
-
-    Scale note: this is the 100-TB data path — tokenization happens
-    JVM-side at scan speed, so stage 1 is scan -> codegen -> shuffle by
-    segment with no Arrow serialization boundary.
-    """
-    from tantivy_spark.functions.fieldnorm import fieldnorm_id_col
-
-    passthrough = [F.col(f.name) for f in base.schema.fields
-                   if f.name != text_col]
-    main_terms = analysis.default_terms_jvm(F.col(text_col))
-    if not extra_fields:
-        return base.select(
-            *passthrough,
-            main_terms.alias("terms"),
-        ).withColumn("token_count", F.size("terms")).withColumn(
-            "fieldnorm_id", fieldnorm_id_col(F.col("token_count")))
-    # multi-field: scoped "f:token" terms appended after the main field's,
-    # each token carrying ITS field's quantized norm (the pandas path's
-    # combined_terms/combined_fns contract)
-    out = base.withColumn("__t_main", main_terms)
-    for f in extra_fields:
-        out = out.withColumn(
-            f"__t_{f}",
-            analysis.default_terms_jvm(F.col(f).cast("string")))
-    out = out.withColumn("token_count", F.size("__t_main")).withColumn(
-        "fieldnorm_id", fieldnorm_id_col(F.col("token_count")))
-    for f in extra_fields:
-        out = out.withColumn(
-            f"xf_tc_{f}", F.size(f"__t_{f}")
-        ).withColumn(f"xf_fn_{f}", fieldnorm_id_col(F.col(f"xf_tc_{f}")))
-    def _scoper(prefix: str):
-        # single-arg lambda: a second (defaulted) param would make PySpark
-        # treat it as transform's (element, index) signature
-        return lambda t: F.concat(F.lit(prefix), t)
-
-    terms = F.concat(
-        F.col("__t_main"),
-        *[F.transform(F.col(f"__t_{f}"), _scoper(f + ":"))
-          for f in extra_fields],
-    )
-    term_fns = F.concat(
-        F.array_repeat(F.col("fieldnorm_id"), F.size("__t_main")),
-        *[F.array_repeat(F.col(f"xf_fn_{f}"), F.size(f"__t_{f}"))
-          for f in extra_fields],
-    )
-    return out.select(
-        *passthrough,
-        terms.alias("terms"),
-        F.col("token_count"),
-        F.col("fieldnorm_id"),
-        term_fns.alias("term_fns"),
-        *[c for f in extra_fields
-          for c in (F.col(f"xf_tc_{f}"), F.col(f"xf_fn_{f}"))],
-    )
 
 
 def _tokenize_arrow(base: DataFrame, text_col: str,
@@ -172,18 +112,17 @@ def _tokenize_arrow(base: DataFrame, text_col: str,
     hot path.
 
     The kernel (functions/arrow_tokenize.py) runs ~12x faster per core
-    than either regex engine (java.util.regex via Catalyst
-    regexp_extract_all, or RE2), so the Arrow serialization boundary is
-    a net win; output columns and values match the pandas/JVM paths
-    exactly (tests/test_arrow_tokenize.py pins the kernel per-codepoint
-    and the docmap frames against each other).
+    than a regex engine (java.util.regex or RE2), so the Arrow
+    serialization boundary is a net win; output columns and values
+    match the pandas path exactly (tests/test_arrow_tokenize.py pins
+    the kernel per-codepoint and the docmap frames against each other).
 
     Multi-field output follows the pandas path's combined contract:
     scoped ``f:token`` terms appended after the main field's, `term_fns`
     carrying each token's own field's quantized norm, per-field
     `xf_tc_/xf_fn_` scalars.  Extra fields are cast to string in the
-    Spark plan (identical to the JVM path's cast semantics) before
-    crossing into Arrow.
+    Spark plan (Catalyst's cast semantics, as the pandas path sees
+    them) before crossing into Arrow.
     """
     for f in extra_fields:
         base = base.withColumn(f, F.col(f).cast("string"))
@@ -411,8 +350,8 @@ def _placement_values(n_segments: int, n_part: int) -> list[int]:
 
 def build_docmap_segment_files(spark: SparkSession, source: DataFrame,
                                docmap_path: str, cfg: IndexConfig) -> None:
-    """Stage 1 with direct file IO — the fused hot path (default analyzer,
-    arrow engine, postings_mode="segment").
+    """Stage 1 with direct file IO — the hash-mode hot path whenever
+    `cfg.uses_arrow_kernel()`.
 
     The DataFrame path tokenizes BEFORE the segment shuffle, so token
     arrays ride the exchange, get sorted twice (the id window + the
@@ -436,8 +375,8 @@ def build_docmap_segment_files(spark: SparkSession, source: DataFrame,
 
     Scale shape: the ONLY shuffle of the entire build moves raw text
     once; stage 1 and stage 2 are otherwise direct-IO passes.  Requires
-    `docmap_path` reachable from executors (the same property
-    postings_mode="segment" already assumes); task retries overwrite
+    `docmap_path` reachable from executors (the same property the
+    per-segment postings encode assumes); task retries overwrite
     their own deterministic filenames idempotently.
     """
     import shutil
@@ -849,8 +788,8 @@ def build_fused_input_files(spark: SparkSession, src_path: str,
     ``split_bytes``.  At 100 TB this is the object-store pattern
     (pyarrow.fs reads s3://... the same way).
 
-    Restrictions (clear errors, not silent fallbacks): default analyzer
-    + arrow engine (like segment_assignment="input"); date_precision
+    Restrictions (clear errors, not silent fallbacks): the arrow kernel
+    must apply (like segment_assignment="input"); date_precision
     and sort_by_field are not supported on this path — use
     `build_fused_input` (the DataFrame variant applies them in
     Catalyst)."""
@@ -1218,10 +1157,11 @@ def build_index_direct(spark: SparkSession, src_path: str, index_dir: str,
         raise ValueError(f"unknown record option {cfg.record!r}")
     if cfg.record == "basic" and cfg.positions:
         raise ValueError("record='basic' cannot record positions")
-    if not (cfg.tokenizer == "default" and cfg.tokenize_engine == "arrow"):
+    if not cfg.uses_arrow_kernel():
         raise ValueError(
             "build_index_direct requires tokenizer='default' and "
-            "tokenize_engine='arrow' (the fused single-pass path)")
+            "jvm_tokenize=True (the fused single-pass path runs the "
+            "arrow kernel)")
     os.makedirs(index_dir, exist_ok=True)
     docmap_path = os.path.join(index_dir, "docmap")
     postings_path = os.path.join(index_dir, "postings")
@@ -1347,25 +1287,12 @@ def build_docmap(spark: SparkSession, source: DataFrame, cfg: IndexConfig,
     base, order = _docmap_base(source, cfg, fixed_segment_ord)
     w = Window.partitionBy("segment_ord").orderBy(*order)
 
-    if (cfg.jvm_tokenize and tokenizer == "default"
-            and cfg.tokenize_engine == "arrow"):
-        # default chain: the vectorized-numpy Arrow kernel (~12x the
-        # regex engines per core; see functions/arrow_tokenize.py) — the
-        # default scale hot path; single or multi field, ± positions
+    if cfg.uses_arrow_kernel():
+        # default chain: the vectorized-numpy Arrow kernel (~12x a regex
+        # engine per core; see functions/arrow_tokenize.py) — the scale
+        # hot path; single or multi field, ± positions
         tokenized = _tokenize_arrow(base, text_col, extra_fields,
                                     positions=positions)
-        return tokenized.withColumn(
-            "doc_id", (F.row_number().over(w) - 1).cast("int"))
-
-    if cfg.jvm_tokenize and tokenizer == "default" and not positions:
-        # default chain, no positions: tokenize stays JVM-side (whole-stage
-        # codegen) — the scale hot path; parity with the pandas analyzer is
-        # per-codepoint exact (tests/test_jvm_tokenize.py).  Tokenize runs
-        # BEFORE the segment window: A/B-measured — running it after the
-        # window (to shuffle raw text instead of token arrays) was ~1.5x
-        # slower at 8 cores (the post-window projection falls out of the
-        # scan stage's codegen pipeline), and only ~5% cheaper at 2.
-        tokenized = _tokenize_jvm(base, text_col, extra_fields)
         return tokenized.withColumn(
             "doc_id", (F.row_number().over(w) - 1).cast("int"))
 
@@ -1382,7 +1309,7 @@ def build_docmap(spark: SparkSession, source: DataFrame, cfg: IndexConfig,
 
 
 # --------------------------------------------------------------------------
-# stage 2: postings (explode -> tf agg -> block encode, skew-sharded)
+# stage 2: postings (one vectorized encode per segment)
 # --------------------------------------------------------------------------
 
 def _rank_coded_terms(str_array):
@@ -1476,63 +1403,6 @@ def _assemble_postings_arrow(seg, uniq_terms, enc, fn_run, term_starts,
     return pa.table(dict(zip(schema.names, cols))).cast(schema)
 
 
-def _encode_runs_arrow(seg, uniq_terms, doc_of_run, tfs_all, fn_of_run,
-                       pos_flat, term_starts, positions):
-    """Flat term-sorted runs -> posting rows: one cross-term block encode
-    (blocks.encode_postings_flat) + one cross-term positions encode +
-    the zero-copy Arrow assembly."""
-    term_starts = np.asarray(term_starts, dtype=np.int64)
-    fn_u8 = np.asarray(fn_of_run, dtype=np.uint8)
-    enc = blocks.encode_postings_flat(doc_of_run, tfs_all, fn_u8, term_starts)
-    if positions:
-        pos_enc, pos_post_off = blocks.encode_positions_flat(
-            pos_flat, tfs_all)
-    else:
-        pos_enc, pos_post_off = b"", None
-    return _assemble_postings_arrow(seg, uniq_terms, enc, fn_u8, term_starts,
-                                    pos_enc, pos_post_off, positions)
-
-
-def _encode_group_arrow(table, positions: bool, basic: bool = False):
-    """Encode one (segment_ord, term-shard) group of pre-aggregated
-    (term, doc, tf[, positions]) runs — the salted path's kernel.
-    All Arrow/numpy; no pandas, no per-term Python."""
-    if table.num_rows == 0:
-        return _postings_enc_arrow_schema().empty_table()
-    table = table.combine_chunks()
-    seg = int(table.column("segment_ord")[0].as_py())
-    codes, uniq_terms = _rank_coded_terms(
-        table.column("term").combine_chunks())
-    doc_ids = table.column("doc_id").to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    tfs = table.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-    fns = table.column("fieldnorm_id").to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    order = np.lexsort((doc_ids, codes))
-    c_s, d_s = codes[order], doc_ids[order]
-    t_s, f_s = tfs[order], fns[order]
-    pos_flat = None
-    if positions:
-        pos_col = table.column("positions").combine_chunks()
-        flat_all = pos_col.flatten().to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        row_off = pos_col.offsets.to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        lens = np.diff(row_off)[order]
-        starts_sorted = row_off[:-1][order]
-        g = np.repeat(starts_sorted, lens) + (
-            np.arange(int(lens.sum()))
-            - np.repeat(np.cumsum(lens) - lens, lens)
-        )
-        pos_flat = flat_all[g]
-    term_starts = np.append(
-        np.flatnonzero(np.diff(c_s, prepend=c_s[0] - 1)), len(c_s))
-    if basic:
-        t_s = np.ones_like(t_s)
-    return _encode_runs_arrow(seg, uniq_terms, d_s, t_s, f_s, pos_flat,
-                              term_starts, positions)
-
-
 def _encode_segment_arrow(table, positions: bool, multi_field: bool,
                           basic: bool = False):
     """Encode ALL postings of one segment in one vectorized pass — the
@@ -1544,8 +1414,9 @@ def _encode_segment_arrow(table, positions: bool, multi_field: bool,
     the cross-term flat block encode."""
     if table.num_rows == 0:
         return _postings_enc_arrow_schema().empty_table()
-    # NOTE: no row-level doc sort — the shuffle delivers rows unordered,
-    # but the stable token-grain lexsort below fully establishes
+    # NOTE: no row-level doc sort — a docmap written from several
+    # partitions (a merge) reads back unordered, but the stable
+    # token-grain lexsort below fully establishes
     # (term, doc, position) order on its own (doc ids are unique per row,
     # and flatten preserves each row's ascending positions), so sorting
     # the table first would just gather every term string twice.
@@ -1598,44 +1469,17 @@ def _encode_segment_arrow(table, positions: bool, multi_field: bool,
     if basic:
         # IndexRecordOption::Basic — docs-only postings, tf fixed at 1
         tfs_all = np.ones_like(tfs_all)
-    # p_s is the per-run positions flat stream (lengths = tfs_all) already
-    return _encode_runs_arrow(seg, uniq_terms, doc_of_run, tfs_all,
-                              fn_of_run, p_s, term_starts, positions)
-
-
-def build_postings_local(docmap: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Segment-local posting construction (tantivy's shape).
-
-    One task per segment builds that segment's complete postings in RAM
-    (the reference's per-thread SegmentWriter arena), so the only shuffles
-    are (a) docmap rows grouped to their segment (~docs, not tokens) and
-    (b) the already-COMPRESSED posting rows moved into term-bucket layout.
-    Shuffling compressed blocks instead of the raw token stream is what
-    keeps the term shuffle ~20-50x smaller at 100 TB; hot terms are
-    naturally salted because each segment emits at most one row per term.
-
-    Memory bound: one segment's docmap batch must fit the task (size
-    segments via cfg.n_segments; ~1-2M docs/segment at production scale).
-    """
-    with_pos = cfg.positions
-    multi = bool(cfg.extra_fields)
-    basic = cfg.record == "basic"
-    cols = ["segment_ord", "doc_id", "fieldnorm_id", "terms"]
-    if with_pos:
-        cols.append("positions")
-    if multi:
-        cols.append("term_fns")
-    return (
-        docmap.select(*cols)
-        .groupBy("segment_ord")
-        .applyInArrow(
-            lambda table: _encode_segment_arrow(table, with_pos, multi,
-                                                basic),
-            schema=POSTINGS_ENC_SCHEMA,
-        )
-        .withColumn("tbucket",
-                    _term_bucket_col(F.col("term"), cfg.n_term_buckets))
-    )
+    # one cross-term block encode + one cross-term positions encode (p_s
+    # is already the per-run positions stream, lengths = tfs_all) + the
+    # zero-copy Arrow assembly
+    fn_u8 = np.asarray(fn_of_run, dtype=np.uint8)
+    enc = blocks.encode_postings_flat(doc_of_run, tfs_all, fn_u8, term_starts)
+    if positions:
+        pos_enc, pos_post_off = blocks.encode_positions_flat(p_s, tfs_all)
+    else:
+        pos_enc, pos_post_off = b"", None
+    return _assemble_postings_arrow(seg, uniq_terms, enc, fn_u8, term_starts,
+                                    pos_enc, pos_post_off, positions)
 
 
 def _segment_task(seg_dir: str, out_path: str, nb: int, positions: bool,
@@ -1651,12 +1495,10 @@ def _segment_task(seg_dir: str, out_path: str, nb: int, positions: bool,
 
     When `terms_path` is given the task also writes its slice of the term
     dictionary (same rows `write_terms` would derive) in the same pass —
-    on a fresh build the dictionary is a free byproduct of the encode, so
-    stage 2.5 costs zero extra jobs."""
+    the dictionary is a free byproduct of the encode, so it costs zero
+    extra jobs."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
-    import zlib
 
     pa.set_cpu_count(1)
     pa.set_io_thread_count(1)
@@ -1681,8 +1523,10 @@ def _encode_write_segment(t, seg: int, out_path: str, nb: int,
                           basic: bool = False) -> dict:
     """Encode one segment's in-memory docmap table and write its
     term-bucketed postings (+ optional term-dictionary slice); returns
-    the segment's lineage metrics.  Shared by `_segment_task` (stage-2
-    file path) and `build_fused_input` (single-pass build)."""
+    the segment's lineage metrics.  The one postings writer: every
+    build, append commit and merge reaches it, through `_segment_task`
+    (a committed docmap partition) or `_fused_segment_core` (the fused
+    single-pass builds)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -1746,15 +1590,14 @@ def build_postings_segment_files(spark: SparkSession, docmap_path: str,
     commit protocol); task retries overwrite their own deterministic
     filenames idempotently.
 
-    Requires docmap_path/postings_path on storage every executor reaches
-    (local[*], NFS, or object store via pyarrow.fs).  The DataFrame modes
-    ("local"/"salted") remain for environments without that property.
+    Replaces the postings (and terms) tables wholesale; requires
+    docmap_path/postings_path on storage every executor reaches
+    (local[*], NFS, or object store via pyarrow.fs).
 
     Returns per-segment lineage metrics (docs, tokens, terms, postings) —
     collected from the same pass, so stage 3 needs no extra stats jobs.
     """
     import glob
-
     import shutil
 
     seg_dirs = sorted(glob.glob(os.path.join(docmap_path, "segment_ord=*")))
@@ -1763,6 +1606,33 @@ def build_postings_segment_files(spark: SparkSession, docmap_path: str,
             shutil.rmtree(p)
         if p:
             os.makedirs(p, exist_ok=True)
+    return _encode_segment_dirs(spark, seg_dirs, postings_path, cfg,
+                                terms_path)
+
+
+def encode_segment(spark: SparkSession, docmap_path: str, seg: int,
+                   postings_path: str, cfg: IndexConfig,
+                   terms_path: str | None = None) -> dict:
+    """Encode the one docmap partition ``segment_ord=<seg>`` that an
+    append commit or a merge just wrote, in one Spark task, next to the
+    segments already in the postings (and terms) tables; returns its
+    lineage metrics.  A segment with no docs (every merged doc deleted,
+    an empty batch) has no partition and gets zero metrics."""
+    seg_dir = os.path.join(docmap_path, f"segment_ord={seg}")
+    if not os.path.isdir(seg_dir):
+        m = {"segment_ord": seg, "n_docs": 0, "n_tokens": 0,
+             "n_terms": 0, "n_postings": 0}
+        if cfg.extra_fields:
+            m["field_tokens"] = {f: 0 for f in cfg.extra_fields}
+        return m
+    return _encode_segment_dirs(spark, [seg_dir], postings_path, cfg,
+                                terms_path)[0]
+
+
+def _encode_segment_dirs(spark: SparkSession, seg_dirs: list[str],
+                         postings_path: str, cfg: IndexConfig,
+                         terms_path: str | None) -> list[dict]:
+    """One `_segment_task` per docmap partition dir, one Spark task each."""
     nb = cfg.n_term_buckets
     positions = cfg.positions
     multi = bool(cfg.extra_fields)
@@ -1776,99 +1646,17 @@ def build_postings_segment_files(spark: SparkSession, docmap_path: str,
     )
 
 
-def build_postings(docmap: DataFrame, cfg: IndexConfig, n_shards: int | None = None) -> DataFrame:
-    """Flat (term, doc, tf) aggregation + cross-term block encoding — the
-    salted shuffle-by-term variant (the default: fine-grained tasks keep
-    every core busy and bound any hot term's postings by segment size).
-
-    The groupBy below does map-side partial aggregation (Catalyst), so the
-    shuffle carries one row per distinct (segment, term, doc) — not one row
-    per token occurrence.  The tbucket column is computed JVM-side (crc32)
-    after the encode, so the Arrow UDF never touches term strings in
-    Python.
-    """
-    if n_shards is None:
-        n_shards = max(cfg.n_segments * 4, 32)
-
-    multi = bool(cfg.extra_fields)
-    if cfg.positions:
-        # zip terms with their analyzer positions (and, multi-field, each
-        # token's own fieldnorm); shuffle carries one row per distinct
-        # (segment, term, doc) with the position list attached
-        zipped = ["terms", "positions"] + (["term_fns"] if multi else [])
-        flat = (
-            docmap.select(
-                "segment_ord",
-                "doc_id",
-                "fieldnorm_id",
-                F.explode(F.arrays_zip(*zipped)).alias("tp"),
-            )
-            .select(
-                "segment_ord", "doc_id",
-                (F.col("tp.term_fns") if multi else F.col("fieldnorm_id"))
-                .alias("fieldnorm_id"),
-                F.col("tp.terms").alias("term"),
-                F.col("tp.positions").alias("pos"),
-            )
-            .groupBy("segment_ord", "term", "doc_id", "fieldnorm_id")
-            .agg(
-                F.count(F.lit(1)).alias("tf"),
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-            )
-        )
-    elif multi:
-        flat = (
-            docmap.select(
-                "segment_ord",
-                "doc_id",
-                F.explode(F.arrays_zip("terms", "term_fns")).alias("tp"),
-            )
-            .select(
-                "segment_ord", "doc_id",
-                F.col("tp.term_fns").alias("fieldnorm_id"),
-                F.col("tp.terms").alias("term"),
-            )
-            .groupBy("segment_ord", "term", "doc_id", "fieldnorm_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    else:
-        flat = (
-            docmap.select(
-                "segment_ord",
-                "doc_id",
-                "fieldnorm_id",
-                F.explode("terms").alias("term"),
-            )
-            .groupBy("segment_ord", "term", "doc_id", "fieldnorm_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    sharded = flat.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("term")), F.lit(n_shards)).cast("int")
-    )
-    with_pos = cfg.positions
-    basic = cfg.record == "basic"
-    return (
-        sharded.groupBy("segment_ord", "shard")
-        .applyInArrow(
-            lambda table: _encode_group_arrow(table, with_pos, basic),
-            schema=POSTINGS_ENC_SCHEMA,
-        )
-        .withColumn("tbucket",
-                    _term_bucket_col(F.col("term"), cfg.n_term_buckets))
-    )
-
-
-
 # --------------------------------------------------------------------------
-# stage 2.5: term dictionary (the FST analogue, materialized)
+# term dictionary (the FST analogue, materialized)
 # --------------------------------------------------------------------------
 
-def write_terms(spark: SparkSession, postings_df: DataFrame, terms_path: str,
-                mode: str = "overwrite",
-                segment_ords: list[int] | None = None) -> None:
-    """Materialize the term dictionary table — the persisted analogue of
-    tantivy's FST term dict (src/termdict/fst_termdict/, ARCHITECTURE.md
-    .term file role).
+def write_terms(spark: SparkSession, postings_df: DataFrame,
+                terms_path: str) -> None:
+    """Materialize the term dictionary table from a postings table — the
+    persisted analogue of tantivy's FST term dict (src/termdict/
+    fst_termdict/, ARCHITECTURE.md .term file role).  Builds, commits and
+    merges write their slices inline (`_encode_write_segment`); this
+    whole-table rewrite serves `merge.garbage_collect`.
 
     One row per (term, segment): the postings table minus its heavy
     encoded-block columns, plus a `tlen` length column.  fuzzy/regex/
@@ -1882,17 +1670,14 @@ def write_terms(spark: SparkSession, postings_df: DataFrame, terms_path: str,
     under merges/streaming commits (live-segment visibility stays
     manifest-driven, like every other index table).
     """
-    terms = postings_df
-    if segment_ords is not None:
-        terms = terms.filter(F.col("segment_ord").isin(list(segment_ords)))
-    terms = terms.select(
+    terms = postings_df.select(
         "term", "segment_ord", "doc_freq", "sum_tf", "tbucket",
         F.length("term").alias("tlen"),
     )
     (
         terms.repartition("tbucket")
         .sortWithinPartitions("tbucket", "term", "segment_ord")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("tbucket")
         .parquet(terms_path)
     )
@@ -1936,14 +1721,10 @@ def build_index(
         cfg = _dc.replace(
             cfg, segment_assignment=cfg.resolved_segment_assignment())
     fused_input = cfg.segment_assignment == "input"
-    if fused_input and not (cfg.postings_mode == "segment"
-                            and cfg.tokenizer == "default"
-                            and cfg.jvm_tokenize
-                            and cfg.tokenize_engine == "arrow"):
+    if fused_input and not cfg.uses_arrow_kernel():
         raise ValueError(
-            "segment_assignment='input' requires postings_mode='segment', "
-            "tokenizer='default', jvm_tokenize=True and "
-            "tokenize_engine='arrow' (the fused single-pass path runs the "
+            "segment_assignment='input' requires tokenizer='default' and "
+            "jvm_tokenize=True (the fused single-pass path runs the "
             "arrow kernel and cannot honor the forced-pandas analyzer); "
             "use segment_assignment='hash' otherwise")
     os.makedirs(index_dir, exist_ok=True)
@@ -1970,9 +1751,7 @@ def build_index(
 
     if not (resume and _stage_done(index_dir, "docmap")):
         t = time.time()
-        if (cfg.postings_mode == "segment" and cfg.jvm_tokenize
-                and cfg.tokenizer == "default"
-                and cfg.tokenize_engine == "arrow"):
+        if cfg.uses_arrow_kernel():
             # fused direct-IO stage 1: the only data crossing the shuffle
             # is raw text; tokens are written to parquet by the same
             # Python worker that produced them (no JVM round-trip, no id
@@ -1984,11 +1763,7 @@ def build_index(
             # spark.sql.shuffle.partitions tasks); write directly from that
             # partitioning — re-repartitioning to exactly n_segments would
             # be a balls-in-bins hash with straggler partitions holding 2+
-            # segments.  (A/B note: persisting the tokenized frame for the
-            # downstream stages was tried and reverted — the cached plan
-            # does not carry its partitioning under AQE, so the groupBy
-            # re-shuffle stays, and the extra cache-write pass costs more
-            # than the parquet re-read it saves on this box.)
+            # segments.
             (
                 docmap.sortWithinPartitions("segment_ord", "doc_id")
                 .write.mode("overwrite")
@@ -1998,66 +1773,20 @@ def build_index(
         _mark_done(index_dir, "docmap")
         stage_times["docmap"] = time.time() - t
 
-    # lazy read-backs: segment mode touches neither frame on a fresh
-    # build (plugins/stats use them only on the DataFrame paths), and
-    # skipping the parquet open saves driver time per build
-    _docmap_df: list[DataFrame | None] = [None]
-
-    def docmap_df() -> DataFrame:
-        if _docmap_df[0] is None:
-            _docmap_df[0] = spark.read.parquet(docmap_path)
-        return _docmap_df[0]
-
     seg_metrics: list[dict] | None = None
-    terms_written_inline = False
     if not (resume and _stage_done(index_dir, "postings")):
         t = time.time()
-        # "segment" (default): one task per segment with direct file IO —
-        # tantivy's per-thread SegmentWriter shape, zero shuffles; also
-        # returns per-segment lineage so stage 3 needs no stats jobs and
-        # writes the term dictionary in the same pass (no stage-2.5 job).
-        # "local" keeps the same dataflow through groupBy/applyInArrow
-        # (for storage layouts pyarrow can't reach); "salted" shuffles
-        # partial-aggregated (term, doc) rows by (segment, term-shard)
-        # for segments too large for one task.  Hot terms are bounded per
-        # reducer by segment size either way (segments are the salt).
-        if cfg.postings_mode == "segment":
-            seg_metrics = build_postings_segment_files(
-                spark, docmap_path, postings_path, cfg,
-                terms_path=os.path.join(index_dir, TERMS_DIR))
-            terms_written_inline = True
-        else:
-            if cfg.postings_mode == "local":
-                postings = build_postings_local(docmap_df(), cfg)
-            else:
-                postings = build_postings(docmap_df(), cfg)
-            # hash-partition the write on (tbucket, term) — NOT
-            # repartitionByRange, whose sampling pass would re-run the
-            # whole encode pipeline.  Files stay term-sorted within each
-            # task, so parquet row-group term stats still prune
-            # exact-term scans.
-            n_write = max(cfg.n_term_buckets,
-                          spark.sparkContext.defaultParallelism)
-            (
-                postings.repartition(n_write, "tbucket", "term")
-                .sortWithinPartitions("tbucket", "term", "segment_ord")
-                .write.mode("overwrite")
-                .partitionBy("tbucket")
-                .parquet(postings_path)
-            )
-        _mark_done(index_dir, "postings")
+        # one task per segment with direct file IO — tantivy's per-thread
+        # SegmentWriter shape, zero shuffles; returns per-segment lineage
+        # so stage 3 needs no stats jobs, and writes the term dictionary
+        # in the same pass.  Hot terms are bounded per task by segment
+        # size (segments are the salt).
+        seg_metrics = build_postings_segment_files(
+            spark, docmap_path, postings_path, cfg,
+            terms_path=os.path.join(index_dir, TERMS_DIR))
+        for st in ("postings", "terms"):
+            _mark_done(index_dir, st)
         stage_times["postings"] = time.time() - t
-
-    # stage 2.5: term dictionary (near-free byproduct of the postings
-    # table; in segment mode the encode tasks already wrote it inline)
-    if terms_written_inline:
-        _mark_done(index_dir, "terms")
-    elif not (resume and _stage_done(index_dir, "terms")):
-        t = time.time()
-        write_terms(spark, spark.read.parquet(postings_path),
-                    os.path.join(index_dir, TERMS_DIR))
-        _mark_done(index_dir, "terms")
-        stage_times["terms"] = time.time() - t
 
     return _finish_build(spark, index_dir, docmap_path, postings_path,
                          cfg, plugins, resume, seg_metrics, t0, stage_times)
@@ -2070,9 +1799,9 @@ def _finish_build(spark: SparkSession, index_dir: str, docmap_path: str,
                   stage_times: dict[str, float]) -> dict:
     """Shared build tail: plugin components, stats/lineage, manifest-last
     atomic commit.  `seg_metrics` non-None means the encode tasks already
-    collected per-segment lineage (segment/fused modes); None falls back
-    to DataFrame stats jobs over the written tables (resume and the
-    "local"/"salted" modes)."""
+    collected per-segment lineage; None (a resume that skipped the
+    encode) falls back to DataFrame stats jobs over the written
+    tables."""
     _docmap_df: list[DataFrame | None] = [None]
 
     def docmap_df() -> DataFrame:
@@ -2100,7 +1829,7 @@ def _finish_build(spark: SparkSession, index_dir: str, docmap_path: str,
     # stage 3: stats + per-segment lineage, manifest committed LAST
     t = time.time()
     if seg_metrics is not None:
-        # segment mode already collected lineage inside the encode tasks
+        # the encode tasks already collected lineage
         segments = sorted(seg_metrics, key=lambda m: m["segment_ord"])
     else:
         xf_aggs = [
@@ -2153,6 +1882,9 @@ def _finish_build(spark: SparkSession, index_dir: str, docmap_path: str,
         "total_docs": int(sum(s["n_docs"] for s in segments)),
         "total_tokens": int(sum(s["n_tokens"] for s in segments)),
         "segments": segments,
+        # a fresh build owns every ord on disk
+        "next_segment_ord": 1 + max(
+            (s["segment_ord"] for s in segments), default=-1),
         "stage_seconds": stage_times,
         "build_seconds": time.time() - t0,
     }
@@ -2176,3 +1908,40 @@ def _finish_build(spark: SparkSession, index_dir: str, docmap_path: str,
 def load_manifest(index_dir: str) -> dict:
     with open(os.path.join(index_dir, MANIFEST_NAME)) as f:
         return json.load(f)
+
+
+def next_segment_ord(index_dir: str, manifest: dict) -> int:
+    """The ord the next new segment (append commit or merge) takes.
+
+    Ords never repeat within an index: a merged-away or deleted segment's
+    files stay on disk until garbage_collect, and both readers select
+    postings rows by segment_ord, so a reused ord would pick up stale
+    rows.  Every build, commit and merge records the counter in the
+    manifest.  Docmap partitions above it (left by a commit or merge
+    that died before its manifest write, which writes the docmap first)
+    push it past them.  A manifest written before the counter existed
+    falls back to 1 + the highest ord on disk — the docmap partition
+    names and the postings files' footers."""
+    import glob
+
+    ords = [int(d.rsplit("=", 1)[1]) for d in glob.glob(
+        os.path.join(index_dir, "docmap", "segment_ord=*"))]
+    if "next_segment_ord" in manifest:
+        return max([int(manifest["next_segment_ord"]) - 1] + ords) + 1
+    import pyarrow.parquet as pq
+
+    ords += [int(s["segment_ord"]) for s in manifest["segments"]]
+    for f in glob.glob(os.path.join(index_dir, "postings", "tbucket=*",
+                                    "*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        col = [md.schema.column(j).path
+               for j in range(md.num_columns)].index("segment_ord")
+        stats = [md.row_group(i).column(col).statistics
+                 for i in range(md.num_row_groups)
+                 if md.row_group(i).num_rows]
+        if all(st is not None and st.has_min_max for st in stats):
+            ords += [int(st.max) for st in stats]
+        else:   # a file written without statistics: read the column
+            ords += np.unique(pq.read_table(f, columns=["segment_ord"])
+                              .column("segment_ord").to_numpy()).tolist()
+    return 1 + max(ords, default=-1)

@@ -15,7 +15,9 @@ Reference:
 
 Spark-first mapping: a merge is a job over the docmap partitions of the
 input segments — re-sort by the stable key, assign new dense doc ids,
-re-encode postings for the merged segment, swap the segment set in the
+write the merged docmap partition, then encode its postings in one task
+with the build's own per-segment encoder (tantivy's merger reuses the
+PostingsSerializer the same way), and swap the segment set in the
 manifest (written last = the atomic commit).  Tombstones are a tiny
 parquet of terms; the deleted-doc set is resolved by a pruned postings
 scan and anti-joined (TAAT) or numpy-excluded (DAAT kernel) at query
@@ -23,9 +25,10 @@ time, exactly the alive-bitset role.
 
 Scale: one merge touches only its input segments' partitions (partition
 pruning on segment_ord); concurrent merges of disjoint layers are
-independent jobs.  The merged segment's postings re-encode is the same
-stage-2 dataflow as the build, bounded by the merged doc count
-(max_docs_before_merge caps it at 10M docs — int32 doc-id-safe).
+independent jobs.  The merged segment's postings encode is the build's
+per-segment task, so one task holds one merged segment — the bound every
+build already has (max_docs_before_merge caps it at 10M docs — int32
+doc-id-safe).
 """
 
 from __future__ import annotations
@@ -44,8 +47,9 @@ from tantivy_spark.config import IndexConfig
 from tantivy_spark.operators.build import (
     MANIFEST_NAME,
     TERMS_DIR,
-    build_postings,
+    encode_segment,
     load_manifest,
+    next_segment_ord,
     write_terms,
 )
 
@@ -246,6 +250,8 @@ def delete_all_documents(spark: SparkSession, index_dir: str) -> None:
     segment list — readers prune by the manifest's live-segment set, so
     the data files become invisible orphans until garbage_collect."""
     manifest = load_manifest(index_dir)
+    # the ords of the dropped segments stay taken: their files remain
+    manifest["next_segment_ord"] = next_segment_ord(index_dir, manifest)
     manifest["segments"] = []
     manifest["total_docs"] = 0
     manifest["total_tokens"] = 0
@@ -268,10 +274,11 @@ def merge_segments(spark: SparkSession, index_dir: str,
                    drop_deleted: bool = True) -> dict:
     """Merge the given segments (default: all) into one new segment.
 
-    The merged segment gets ord = max(existing)+1; docs re-sorted by the
-    stable key (the index-sorting invariant), dense ids reassigned, deleted
-    docs physically dropped (merger.rs drop-deleted semantics), postings
-    re-encoded.  Manifest rewritten LAST (atomic commit protocol).
+    The merged segment takes the index's next unused ord; docs re-sorted
+    by the stable key (the index-sorting invariant), dense ids
+    reassigned, deleted docs physically dropped (merger.rs drop-deleted
+    semantics), postings re-encoded.  Manifest rewritten LAST (atomic
+    commit protocol).
     """
     from tantivy_spark.operators.search import Searcher
 
@@ -280,7 +287,7 @@ def merge_segments(spark: SparkSession, index_dir: str,
     all_ords = [s["segment_ord"] for s in manifest["segments"]]
     if segment_ords is None:
         segment_ords = all_ords
-    new_ord = max(all_ords) + 1
+    new_ord = next_segment_ord(index_dir, manifest)
 
     docmap_path = os.path.join(index_dir, "docmap")
     postings_path = os.path.join(index_dir, "postings")
@@ -343,66 +350,25 @@ def merge_segments(spark: SparkSession, index_dir: str,
         .drop("__pid")
     )
 
-    # write new docmap partition, new postings partitions (append)
+    # write the merged segment's docmap partition (append)
     merged.sortWithinPartitions("doc_id").write.mode("append").partitionBy(
         "segment_ord"
     ).parquet(docmap_path)
     part_sorted.unpersist()
 
-    merged_dm = spark.read.parquet(docmap_path).filter(
-        F.col("segment_ord") == new_ord
-    )
-    new_postings = build_postings(merged_dm, cfg)
-    n_write = max(cfg.n_term_buckets, spark.sparkContext.defaultParallelism)
-    (
-        new_postings.repartition(n_write, "tbucket", "term")
-        .sortWithinPartitions("tbucket", "term", "segment_ord")
-        .write.mode("append")
-        .partitionBy("tbucket")
-        .parquet(postings_path)
-    )
-
-    # append the merged segment's term-dict rows (same visibility rules)
-    if os.path.exists(os.path.join(index_dir, TERMS_DIR)):
-        write_terms(
-            spark,
-            spark.read.parquet(postings_path).filter(
-                F.col("segment_ord") == new_ord
-            ),
-            os.path.join(index_dir, TERMS_DIR),
-            mode="append",
-        )
-
-    xf_aggs = [
-        F.sum(f"xf_tc_{f}").alias(f"xf_tokens_{f}") for f in cfg.extra_fields
-    ]
-    stats = merged_dm.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("token_count").alias("n_tokens"),
-        *xf_aggs,
-    ).collect()[0]
-    pstats = (
-        spark.read.parquet(postings_path)
-        .filter(F.col("segment_ord") == new_ord)
-        .agg(F.count(F.lit(1)).alias("n_terms"), F.sum("doc_freq").alias("n_postings"))
-        .collect()[0]
-    )
+    # the merged segment's postings (+ its term-dictionary slice when the
+    # index has the table): the build's per-segment encoder in one task
+    terms_path = os.path.join(index_dir, TERMS_DIR)
+    new_entry = encode_segment(
+        spark, docmap_path, new_ord, postings_path, cfg,
+        terms_path if os.path.exists(terms_path) else None)
+    new_entry["merged_from"] = sorted(segment_ords)
 
     # swap the segment set; manifest written last = commit (end_merge)
     kept = [s for s in manifest["segments"] if s["segment_ord"] not in segment_ords]
-    new_entry = {
-        "segment_ord": new_ord,
-        "n_docs": int(stats["n_docs"]),
-        "n_tokens": int(stats["n_tokens"] or 0),
-        "n_terms": int(pstats["n_terms"] or 0),
-        "n_postings": int(pstats["n_postings"] or 0),
-        "merged_from": sorted(segment_ords),
-    }
-    if cfg.extra_fields:
-        new_entry["field_tokens"] = {
-            f: int(stats[f"xf_tokens_{f}"] or 0) for f in cfg.extra_fields
-        }
     kept.append(new_entry)
     manifest["segments"] = sorted(kept, key=lambda s: s["segment_ord"])
+    manifest["next_segment_ord"] = new_ord + 1
     manifest["total_docs"] = int(sum(s["n_docs"] for s in manifest["segments"]))
     manifest["total_tokens"] = int(sum(s["n_tokens"] for s in manifest["segments"]))
     if cfg.extra_fields:

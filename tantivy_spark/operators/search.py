@@ -888,9 +888,10 @@ class Searcher(Bm25StatsMixin):
             os.path.join(self.index_dir, TERMS_DIR)))
 
     def terms_table(self) -> DataFrame | None:
-        """The materialized per-segment term dictionary written at build
-        time (build.write_terms — the persisted FST analogue), filtered to
-        the manifest's live segments; None for pre-terms-table indexes."""
+        """The materialized per-segment term dictionary each segment's
+        encode writes (build._encode_write_segment — the persisted FST
+        analogue), filtered to the manifest's live segments; None for
+        pre-terms-table indexes."""
         if not self._has_terms_table():
             return None
         return self.spark.read.parquet(
@@ -2503,16 +2504,3 @@ class BatchSearchServer:
 
         shutil.rmtree(self._dir, ignore_errors=True)
 
-
-# IndexConfig helper used above
-def _from_json_dict(d: dict) -> IndexConfig:
-    d = dict(d)
-    d["key_cols"] = tuple(d["key_cols"])
-    d["extra_fields"] = tuple(d.get("extra_fields", ()))
-    d["field_bm25"] = tuple(tuple(t) for t in d.get("field_bm25", ()))
-    if d.get("sort_by_field") is not None:
-        d["sort_by_field"] = tuple(d["sort_by_field"])
-    return IndexConfig(**d)
-
-
-IndexConfig.from_json_dict = staticmethod(_from_json_dict)  # type: ignore[attr-defined]

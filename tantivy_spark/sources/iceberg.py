@@ -966,7 +966,7 @@ def sync_index(spark, table_path: str, index_dir: str, cfg=None,
     delete commit, an append from another writer) does NOT promote, so
     never-indexed pending files can't be silently dropped."""
     from ..config import IndexConfig
-    from ..operators.build import load_manifest
+    from ..operators.build import load_manifest, next_segment_ord
     from ..streaming.incremental import _append_segment
 
     try:
@@ -978,7 +978,8 @@ def sync_index(spark, table_path: str, index_dir: str, cfg=None,
             # later syncs inherit the index's own recorded config — the
             # common case needs no cfg at all
             cfg = IndexConfig.from_json_dict(existing_cfg)
-        elif json.loads(cfg.to_json()) != existing_cfg:
+        elif cfg.to_json() != IndexConfig.from_json_dict(
+                existing_cfg).to_json():
             raise ValueError(
                 "sync_index config differs from the index's recorded "
                 "config — segments built under different analyzers/"
@@ -1012,11 +1013,12 @@ def sync_index(spark, table_path: str, index_dir: str, cfg=None,
     side_path = os.path.join(index_dir, "iceberg_sync.json")
 
     def manifest_max_ord() -> int:
+        # highest ord ever taken: advances with every append, never
+        # falls back (a delete_all_documents empties the segment list)
         try:
-            m = load_manifest(index_dir)
+            return next_segment_ord(index_dir, load_manifest(index_dir)) - 1
         except FileNotFoundError:
             return -1
-        return max((s["segment_ord"] for s in m["segments"]), default=-1)
 
     uuid_now = tbl.metadata.get("table-uuid")
     side = {"table": os.path.abspath(_strip_scheme(table_path)),

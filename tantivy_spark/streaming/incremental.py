@@ -6,8 +6,9 @@ src/reader/mod.rs:21-30).  The Spark-native analogue maps a streaming
 micro-batch to one commit: each `foreachBatch` invocation appends new
 segments (one per batch partition on the fused default path — tantivy's
 multi-segment commit, where every worker thread seals its own segment;
-one combined segment on the fallback path) and atomically rewrites the
-manifest — the same files-then-meta.json protocol as the batch build.
+one combined segment when the pandas analyzer runs) and atomically
+rewrites the manifest — the same files-then-meta.json protocol as the
+batch build.
 Merge pressure from many small segments is handled by the LogMergePolicy
 compaction job (operators/merge.py), tantivy's merge-thread role.
 
@@ -23,16 +24,15 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tantivy_spark.config import IndexConfig
 from tantivy_spark.operators.build import (
     MANIFEST_NAME,
     TERMS_DIR,
     build_docmap,
-    build_postings_local,
+    encode_segment,
     load_manifest,
-    write_terms,
+    next_segment_ord,
 )
 
 
@@ -41,9 +41,11 @@ def _append_segment(spark: SparkSession, batch_df: DataFrame, index_dir: str,
                     manifest_extra: dict | None = None) -> dict:
     """Index one micro-batch as new segment(s); returns the new manifest.
 
-    Default configs take the fused shuffle-free pass (one segment per
-    batch partition, `build.build_fused_input` append mode); non-default
-    analyzers/engines keep the DataFrame path (one combined segment).
+    When the arrow kernel applies the batch takes the fused shuffle-free
+    pass (one segment per batch partition, `build.build_fused_input`
+    append mode); otherwise the pandas analyzer writes one combined
+    docmap partition and the build's per-segment encoder writes its
+    postings and term-dictionary slice.
 
     `manifest_extra` entries are stamped into the manifest TOP LEVEL in
     the same atomic commit — callers that need commit evidence that
@@ -54,11 +56,7 @@ def _append_segment(spark: SparkSession, batch_df: DataFrame, index_dir: str,
     postings_path = os.path.join(index_dir, "postings")
     try:
         manifest = load_manifest(index_dir)
-        # default=-1: a manifest can legitimately carry segments: [] (an
-        # all-empty first micro-batch on the fused path, or a
-        # delete_all_documents commit) — the next batch starts at ord 0
-        next_ord = max(
-            (s["segment_ord"] for s in manifest["segments"]), default=-1) + 1
+        next_ord = next_segment_ord(index_dir, manifest)
     except FileNotFoundError:
         os.makedirs(index_dir, exist_ok=True)
         manifest = {
@@ -72,11 +70,8 @@ def _append_segment(spark: SparkSession, batch_df: DataFrame, index_dir: str,
         }
         next_ord = 0
 
-    fused_ok = (cfg.postings_mode == "segment"
-                and cfg.tokenizer == "default"
-                and cfg.tokenize_engine == "arrow"
-                and cfg.segment_assignment in ("auto", "hash", "input"))
-    if fused_ok:
+    terms_path = os.path.join(index_dir, TERMS_DIR)
+    if cfg.uses_arrow_kernel():
         # fused append commit: the batch's partitions become new
         # segments in ONE shuffle-free pass (tantivy's multi-segment
         # commit — every worker thread seals its own segment,
@@ -84,59 +79,21 @@ def _append_segment(spark: SparkSession, batch_df: DataFrame, index_dir: str,
         # segment ords, existing files untouched, manifest-last below
         from tantivy_spark.operators.build import build_fused_input
 
-        now = time.time()
-        new_entries = [
-            {**m, "committed_at": now}
-            for m in build_fused_input(
-                spark, batch_df, docmap_path, postings_path,
-                os.path.join(index_dir, TERMS_DIR), cfg,
-                seg_offset=next_ord, append=True)
-        ]
+        new_entries = build_fused_input(
+            spark, batch_df, docmap_path, postings_path, terms_path, cfg,
+            seg_offset=next_ord, append=True)
     else:
         docmap = build_docmap(spark, batch_df, cfg,
                               fixed_segment_ord=next_ord)
         docmap.sortWithinPartitions("doc_id").write.mode(
             "append").partitionBy("segment_ord").parquet(docmap_path)
-
-        seg_dm = spark.read.parquet(docmap_path).filter(
-            F.col("segment_ord") == next_ord
-        )
-        postings = build_postings_local(seg_dm, cfg)
-        postings.write.mode("append").partitionBy("tbucket").parquet(
-            postings_path)
-
-        # append this commit's term-dict rows (one new segment =
-        # append-only)
-        write_terms(
-            spark,
-            spark.read.parquet(postings_path).filter(
-                F.col("segment_ord") == next_ord
-            ),
-            os.path.join(index_dir, TERMS_DIR),
-            mode="append",
-        )
-
-        xf_aggs = [
-            F.sum(f"xf_tc_{f}").alias(f"xf_tokens_{f}")
-            for f in cfg.extra_fields
-        ]
-        stats = seg_dm.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("token_count").alias("n_tokens"),
-            *xf_aggs,
-        ).collect()[0]
-        seg_entry = {
-            "segment_ord": next_ord,
-            "n_docs": int(stats["n_docs"] or 0),
-            "n_tokens": int(stats["n_tokens"] or 0),
-            "committed_at": time.time(),
-        }
-        if cfg.extra_fields:
-            seg_entry["field_tokens"] = {
-                f: int(stats[f"xf_tokens_{f}"] or 0)
-                for f in cfg.extra_fields
-            }
-        new_entries = [seg_entry]
+        new_entries = [encode_segment(spark, docmap_path, next_ord,
+                                      postings_path, cfg, terms_path)]
+    now = time.time()
+    for e in new_entries:
+        e["committed_at"] = now
+    manifest["next_segment_ord"] = 1 + max(
+        [next_ord - 1] + [e["segment_ord"] for e in new_entries])
     manifest["segments"].extend(new_entries)
     manifest["total_docs"] = int(sum(s["n_docs"] for s in manifest["segments"]))
     manifest["total_tokens"] = int(

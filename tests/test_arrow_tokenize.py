@@ -4,11 +4,12 @@ The index build's default hot path tokenizes with the vectorized numpy
 kernel over raw Arrow buffers (functions/arrow_tokenize.py, wired in
 build.py _tokenize_arrow).  A divergent byte anywhere silently splits
 the index vocabulary from the query analyzer, so parity is pinned here:
-per-codepoint class membership (full-space strided sweep + the skew
-patch ranges exhaustively), the RemoveLong byte boundary, the
-no-final-sigma lowercase contract incl. the U+0130 utf8proc patch, doc
-boundaries, null handling, and whole-docmap equality of the three
-engines (arrow / jvm / pandas) on adversarial corpora.
+per-codepoint class membership (full-space strided sweep + the
+Unicode-version-skew ranges exhaustively), the RemoveLong byte boundary,
+the no-final-sigma lowercase contract incl. the U+0130 utf8proc patch,
+doc boundaries, null handling, and whole-docmap equality of the three
+stage-1 dataflows (arrow kernel in a DataFrame stage, arrow kernel in
+the direct-IO docmap writer, pandas analyzer) on adversarial corpora.
 """
 from __future__ import annotations
 
@@ -23,9 +24,66 @@ from pyspark.sql import functions as F
 from tantivy_spark.config import IndexConfig
 from tantivy_spark.functions import analysis
 from tantivy_spark.functions.arrow_tokenize import tokenize_default_arrow
-from tantivy_spark.operators.build import build_docmap
+from tantivy_spark.operators.build import (build_docmap,
+                                           build_docmap_segment_files)
 
-from tests.test_jvm_tokenize import EDGE_TEXTS, _PATCH_SAMPLES, _py_tokens
+#: Codepoints CPython (Unicode 15) classes as alphanumeric but Java 17
+#: (Unicode 13) does not (525 cps, all added to Unicode after 13: Arabic
+#: Extended-B, Latin Ext-F/G, Old Uyghur, Cypro-Minoan, Tangsa, Kana
+#: Ext-B, CJK Ext ...) — the characters where engines built on different
+#: Unicode versions disagree, swept exhaustively below.
+_SKEW_RANGES = (
+    (0x870, 0x887), (0x889, 0x88E), (0x8B5, 0x8B5), (0x8C8, 0x8C9),
+    (0xC5D, 0xC5D), (0xCDD, 0xCDD), (0x170D, 0x170D), (0x171F, 0x171F),
+    (0x1B4C, 0x1B4C), (0x2C2F, 0x2C2F), (0x2C5F, 0x2C5F), (0x9FFD, 0x9FFF),
+    (0xA7C0, 0xA7C1), (0xA7D0, 0xA7D1), (0xA7D3, 0xA7D3), (0xA7D5, 0xA7D9),
+    (0xA7F2, 0xA7F4), (0x10570, 0x1057A), (0x1057C, 0x1058A),
+    (0x1058C, 0x10592), (0x10594, 0x10595), (0x10597, 0x105A1),
+    (0x105A3, 0x105B1), (0x105B3, 0x105B9), (0x105BB, 0x105BC),
+    (0x10780, 0x10785), (0x10787, 0x107B0), (0x107B2, 0x107BA),
+    (0x10F70, 0x10F81), (0x11071, 0x11072), (0x11075, 0x11075),
+    (0x11740, 0x11746), (0x11AB0, 0x11ABF), (0x12F90, 0x12FF0),
+    (0x16A70, 0x16ABE), (0x16AC0, 0x16AC9), (0x1AFF0, 0x1AFF3),
+    (0x1AFF5, 0x1AFFB), (0x1AFFD, 0x1AFFE), (0x1B11F, 0x1B122),
+    (0x1DF00, 0x1DF1E), (0x1E290, 0x1E2AD), (0x1E7E0, 0x1E7E6),
+    (0x1E7E8, 0x1E7EB), (0x1E7ED, 0x1E7EE), (0x1E7F0, 0x1E7FE),
+    (0x2A6DE, 0x2A6DF), (0x2B735, 0x2B738),
+)
+
+# chars from the Unicode-version-skew ranges (Python-only word chars)
+_PATCH_SAMPLES = [chr(a) for a, _ in _SKEW_RANGES] + [
+    chr(b) for _, b in _SKEW_RANGES
+]
+
+EDGE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "___",
+    "hello world",
+    "Hello_World mixed_CASE",
+    "ΣΑΣ ΟΔΥΣΣΕΥΣ τελος ΤΕΛΟΣ σοφός ήδη ΉΔΗ",          # final-sigma contexts
+    "ςδε δες ΑΣΒ",                                      # genuine ς preserved
+    "İstanbul ısız SS ß ẞ straße STRASSE",               # special casings
+    "a" * 39 + " " + "b" * 40 + " " + "c" * 41,          # byte-length boundary
+    "é" * 19 + " " + "é" * 20 + " " + "é" * 21,          # 2-byte chars at 38/40/42
+    "€100 50% a+b=c x_y-z",
+    "日本語のテキスト 中文文本 русский текст العربية",
+    "Ⅻ ⅻ ① ¼ ² ３．１４",                                # Nl / No / fullwidth digits
+    "ﬁﬂﬆ ǅǈǋ ǆǉǌ",                                       # ligature/titlecase lowers
+    " ".join(_PATCH_SAMPLES),                            # version-skew chars
+    "á ë̄ combining",                   # combining marks split
+    "tab\tnewline\nmix\r\nend",
+    "𝕳𝖊𝖑𝖑𝖔 𝒲𝑜𝓇𝓁𝒹 𝟙𝟚𝟛",                                  # math alnum (astral)
+    "😀 emoji 🎉 mix 🚀x",
+]
+
+
+def _py_tokens(texts: list[str | None]) -> list[list[str]]:
+    return [
+        analysis.tokenize_default(t)[0] if t is not None else []
+        for t in texts
+    ]
 
 
 def _arrow_tokens(texts: list[str | None]) -> list[list[str]]:
@@ -71,7 +129,7 @@ class TestKernelParity:
         shot); patch-range codepoints exhaustively."""
         cps = [cp for cp in range(0x20, 0x110000, 7)
                if not (0xD800 <= cp <= 0xDFFF)]
-        for a, b in analysis._JVM_CLASS_PATCH_RANGES:
+        for a, b in _SKEW_RANGES:
             cps.extend(range(a, b + 1))
         texts = [f"a{chr(c)}b" for c in cps]
         got = _arrow_tokens(texts)
@@ -126,8 +184,29 @@ class TestKernelParity:
         assert _arrow_tokens(texts) == _py_tokens(texts)
 
 
+def _stage1_frames(spark, src, cols, list_cols, docmap_dir, **cfg_kw):
+    """The docmap of each stage-1 dataflow, key-sorted: the arrow kernel
+    in a DataFrame stage, the arrow kernel inside the direct-IO docmap
+    writer (read back from its files), and the pandas analyzer."""
+    frames = []
+    for engine in ("arrow", "direct", "pandas"):
+        cfg = IndexConfig(n_segments=4, jvm_tokenize=engine != "pandas",
+                          **cfg_kw)
+        if engine == "direct":
+            build_docmap_segment_files(spark, src, docmap_dir, cfg)
+            dm = spark.read.parquet(docmap_dir)
+        else:
+            dm = build_docmap(spark, src, cfg)
+        f = (dm.select(*cols).toPandas()
+             .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+        for c in list_cols:
+            f[c] = f[c].map(list)
+        frames.append(f)
+    return frames
+
+
 class TestDocmapEquality:
-    def test_three_engines_identical(self, spark):
+    def test_three_engines_identical(self, spark, tmp_path):
         rng = random.Random(3)
         pool = EDGE_TEXTS[4:] + ["plain text turn", "Σ İ Ⱥ mixed 𝟙𝟚"]
         pdf = pd.DataFrame({
@@ -138,18 +217,12 @@ class TestDocmapEquality:
         src = spark.createDataFrame(pdf)
         cols = ["conv_id", "turn_idx", "segment_ord", "doc_id",
                 "terms", "token_count", "fieldnorm_id"]
-        frames = []
-        for engine, jvm in (("arrow", True), ("jvm", True), ("pandas", False)):
-            cfg = IndexConfig(n_segments=4, jvm_tokenize=jvm,
-                              tokenize_engine=engine)
-            f = (build_docmap(spark, src, cfg).select(*cols).toPandas()
-                 .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-            f["terms"] = f["terms"].map(list)
-            frames.append(f)
+        frames = _stage1_frames(spark, src, cols, ["terms"],
+                                str(tmp_path / "docmap"))
         pd.testing.assert_frame_equal(frames[0], frames[1])
         pd.testing.assert_frame_equal(frames[0], frames[2])
 
-    def test_multifield_three_engines_identical(self, spark):
+    def test_multifield_three_engines_identical(self, spark, tmp_path):
         rng = random.Random(17)
         pool = EDGE_TEXTS[4:] + ["plain text turn", "Σ İ mixed"]
         roles = ["user", "assistant", "TOOL call", "", None, "Σ É role"]
@@ -164,16 +237,9 @@ class TestDocmapEquality:
         cols = ["conv_id", "turn_idx", "segment_ord", "doc_id", "terms",
                 "token_count", "fieldnorm_id", "term_fns",
                 "xf_tc_role", "xf_fn_role", "xf_tc_nval", "xf_fn_nval"]
-        frames = []
-        for engine, jvm in (("arrow", True), ("jvm", True), ("pandas", False)):
-            cfg = IndexConfig(n_segments=4, jvm_tokenize=jvm,
-                              tokenize_engine=engine,
-                              extra_fields=("role", "nval"))
-            f = (build_docmap(spark, src, cfg).select(*cols).toPandas()
-                 .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-            for c in ("terms", "term_fns"):
-                f[c] = f[c].map(list)
-            frames.append(f)
+        frames = _stage1_frames(spark, src, cols, ["terms", "term_fns"],
+                                str(tmp_path / "docmap"),
+                                extra_fields=("role", "nval"))
         pd.testing.assert_frame_equal(frames[0], frames[1])
         pd.testing.assert_frame_equal(frames[0], frames[2])
 
@@ -233,7 +299,8 @@ class TestDocmapEquality:
     def test_fused_direct_io_build_identical(self, spark, tmp_path):
         """The fused stage-1 (build_docmap_segment_files: text-only
         shuffle, ids + parquet write inside the tokenize task) must
-        produce the same index as the legacy DataFrame path — same docmap
+        produce the same index as the DataFrame stage-1 with the pandas
+        analyzer — same docmap
         rows AND ids, same Spark-read schema (incl. timestamp columns
         round-tripped through the pyarrow writer), byte-identical
         postings and terms tables."""
@@ -268,8 +335,7 @@ class TestDocmapEquality:
         # STAGE-1 dataflows under the content-hashed segment layout (the
         # API default now resolves to input-partition segments)
         dm_f, po_f, te_f = build("fused", segment_assignment="hash")
-        dm_l, po_l, te_l = build("legacy", postings_mode="local",
-                                 jvm_tokenize=False)
+        dm_l, po_l, te_l = build("legacy", jvm_tokenize=False)
 
         assert dict(dm_f.dtypes) == dict(dm_l.dtypes)
 
@@ -320,7 +386,7 @@ class TestDocmapEquality:
         cols = ["conv_id", "turn_idx", "segment_ord", "doc_id",
                 "terms", "positions", "token_count", "fieldnorm_id"]
         frames = []
-        for jvm in (True, False):  # arrow vs pandas (jvm can't do positions)
+        for jvm in (True, False):  # arrow vs pandas
             cfg = IndexConfig(n_segments=4, positions=True, jvm_tokenize=jvm)
             f = (build_docmap(spark, src, cfg).select(*cols).toPandas()
                  .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))

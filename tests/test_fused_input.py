@@ -76,8 +76,6 @@ def test_default_config_resolves_to_fused_input(spark, tmp_root):
     assert IndexConfig().resolved_segment_assignment() == "input"
     assert (IndexConfig(tokenizer="whitespace")
             .resolved_segment_assignment() == "hash")
-    assert (IndexConfig(postings_mode="salted")
-            .resolved_segment_assignment() == "hash")
     assert (IndexConfig(jvm_tokenize=False)
             .resolved_segment_assignment() == "hash")
 
@@ -164,9 +162,8 @@ def test_invalid_combinations_raise(spark, tmp_root):
     src = transcripts_df(spark, 5, partitions=1)
     idx = f"{tmp_root}/fused_bad_{time.time_ns()}"
     for kwargs in (
-        {"postings_mode": "salted"},
         {"tokenizer": "whitespace"},
-        {"tokenize_engine": "jvm"},
+        {"jvm_tokenize": False},
     ):
         cfg = IndexConfig(segment_assignment="input", **kwargs)
         with pytest.raises(ValueError, match="segment_assignment"):
@@ -299,9 +296,9 @@ def test_direct_build_rejects_unsupported(spark, tmp_root):
     with pytest.raises(ValueError, match="sort_by_field"):
         build_index_direct(spark, src_path, idx,
                            IndexConfig(sort_by_field=("turn_idx", "asc")))
-    with pytest.raises(ValueError, match="tokenize_engine"):
+    with pytest.raises(ValueError, match="tokenizer"):
         build_index_direct(spark, src_path, idx,
-                           IndexConfig(tokenize_engine="jvm"))
+                           IndexConfig(tokenizer="whitespace"))
 
 
 def test_merge_compacts_input_mode_segments(spark, tmp_root):

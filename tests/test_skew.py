@@ -1,10 +1,9 @@
 """Hot-term skew: the north rule requires explicit skew handling.
 
-The salted-term-shuffle design bounds a hot term's postings per reducer by
-the segment size (segments are the salt): a term occurring in EVERY doc
-still produces exactly one encoded row per (term, segment), and the encode
-groups are keyed by (segment, term-shard), so no reducer ever sees more
-than one segment's worth of one term."""
+Segments are the salt: the postings step encodes one segment per task,
+so a term occurring in EVERY doc still produces exactly one encoded row
+per (term, segment), and no task ever holds more than one segment's
+worth of one term."""
 
 import time
 
@@ -35,8 +34,8 @@ def test_hot_term_bounded_per_segment(spark, tmp_root):
 
     post = spark.read.parquet(os.path.join(idx, "postings"))
     hot = post.filter(F.col("term") == "hot").collect()
-    # exactly one encoded row per segment -> the shuffle key-space is
-    # (term x segment), never a single giant reducer
+    # exactly one encoded row per segment -> the work splits by
+    # (term x segment), never into a single giant task
     assert len(hot) == 8
     assert sum(r["doc_freq"] for r in hot) == n
     assert all(r["doc_freq"] < n for r in hot)

@@ -12,10 +12,9 @@ mis-transcribe from the spec:
   column (used by tests/test_webpcodec.py with random residuals),
 * the color-transform multiplier channel layout.
 
-This is the same methodology as tools/probe_jvm_tokenize.py and the
-PG-snowball probes: when a published table/algorithm has transcription
-hazards, extract ground truth from the official implementation and pin
-it in tests.  Only used by tools/tests — never at decode time.
+This is the same methodology as the PG-snowball probes: when a
+published table/algorithm has transcription hazards, extract ground
+truth from the official implementation and pin it in tests.  Only used by tools/tests — never at decode time.
 """
 
 from __future__ import annotations
