@@ -1,136 +1,21 @@
-"""JVM (Catalyst) default-analyzer parity vs the Python parity oracle.
+"""Docmap parity of the two settings of ``IndexConfig.jvm_tokenize``.
 
-The index build's hot path tokenizes JVM-side (build.py _tokenize_jvm);
-the query side and every oracle analyze with the Python chain
-(functions/analysis.py).  A single divergent codepoint silently splits
-the index vocabulary from the query analyzer — so parity is pinned here:
-per-codepoint class membership, per-char lowercase, byte-length filter,
-and whole-docmap equality on adversarial corpora (single and multi field).
+``jvm_tokenize=True`` (the default) tokenizes the default analyzer with
+the Arrow kernel; ``jvm_tokenize=False`` forces the vectorized-pandas
+analyzer.  Both must yield the same docmap on adversarial corpora
+(single and multi field), or the vocabulary an index is built with
+would depend on a performance switch.
 """
 from __future__ import annotations
 
 import random
 
-import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from tantivy_spark.config import IndexConfig
-from tantivy_spark.functions import analysis
-from tantivy_spark.functions.fieldnorm import fieldnorm_id_col, fieldnorm_to_id
 from tantivy_spark.operators.build import build_docmap
-
-# chars from the Unicode-version-skew patch ranges (Python-only word chars)
-_PATCH_SAMPLES = [chr(a) for a, _ in analysis._JVM_CLASS_PATCH_RANGES] + [
-    chr(b) for _, b in analysis._JVM_CLASS_PATCH_RANGES
-]
-
-EDGE_TEXTS = [
-    None,
-    "",
-    "   ",
-    "___",
-    "hello world",
-    "Hello_World mixed_CASE",
-    "ΣΑΣ ΟΔΥΣΣΕΥΣ τελος ΤΕΛΟΣ σοφός ήδη ΉΔΗ",          # final-sigma contexts
-    "ςδε δες ΑΣΒ",                                      # genuine ς preserved
-    "İstanbul ısız SS ß ẞ straße STRASSE",               # special casings
-    "a" * 39 + " " + "b" * 40 + " " + "c" * 41,          # byte-length boundary
-    "é" * 19 + " " + "é" * 20 + " " + "é" * 21,          # 2-byte chars at 38/40/42
-    "€100 50% a+b=c x_y-z",
-    "日本語のテキスト 中文文本 русский текст العربية",
-    "Ⅻ ⅻ ① ¼ ² ３．１４",                                # Nl / No / fullwidth digits
-    "ﬁﬂﬆ ǅǈǋ ǆǉǌ",                                       # ligature/titlecase lowers
-    " ".join(_PATCH_SAMPLES),                            # version-skew chars
-    "á ë̄ combining",                   # combining marks split
-    "tab\tnewline\nmix\r\nend",
-    "𝕳𝖊𝖑𝖑𝖔 𝒲𝑜𝓇𝓁𝒹 𝟙𝟚𝟛",                                  # math alnum (astral)
-    "😀 emoji 🎉 mix 🚀x",
-]
-
-
-def _jvm_tokens(spark, texts: list[str | None]) -> list[list[str]]:
-    pdf = pd.DataFrame({"i": range(len(texts)), "text": texts})
-    df = spark.createDataFrame(pdf).select(
-        "i", analysis.default_terms_jvm(F.col("text")).alias("terms"))
-    rows = {r["i"]: list(r["terms"]) for r in df.collect()}
-    return [rows[i] for i in range(len(texts))]
-
-
-def _py_tokens(texts: list[str | None]) -> list[list[str]]:
-    return [
-        analysis.tokenize_default(t)[0] if t is not None else []
-        for t in texts
-    ]
-
-
-class TestTermParity:
-    def test_edge_vectors(self, spark):
-        assert _jvm_tokens(spark, EDGE_TEXTS) == _py_tokens(EDGE_TEXTS)
-
-    def test_random_fuzz(self, spark):
-        rng = random.Random(0x70)
-        # alphabet biased toward edge classes: boundaries of the patch
-        # ranges, sigma forms, combining marks, separators, high planes
-        pool = (
-            [chr(c) for c in range(0x20, 0x250)]
-            + ["Σ", "σ", "ς", "İ", "ı", "ß", "ẞ", "_", " ", "\t", "\n"]
-            + _PATCH_SAMPLES
-            + [chr(rng.randrange(0x250, 0x3000)) for _ in range(200)]
-            + [chr(rng.randrange(0x1D400, 0x1D800)) for _ in range(50)]
-            + [chr(rng.randrange(0x10000, 0x30000)) for _ in range(100)]
-        )
-        texts = [
-            "".join(rng.choice(pool) for _ in range(rng.randrange(0, 120)))
-            for _ in range(300)
-        ]
-        assert _jvm_tokens(spark, texts) == _py_tokens(texts)
-
-    def test_codepoint_class_sweep(self, spark):
-        """Strided sweep over the full codepoint space: JVM class
-        membership == Python isalnum (the probe's full-space result,
-        down-sampled to keep CI fast; patch ranges covered exhaustively)."""
-        cps = [
-            cp for cp in range(0x20, 0x110000, 17)
-            if not (0xD800 <= cp <= 0xDFFF)
-        ]
-        for a, b in analysis._JVM_CLASS_PATCH_RANGES:
-            cps.extend(range(a, b + 1))
-        chars = [chr(cp) for cp in cps]
-        pdf = pd.DataFrame({"cp": cps, "ch": chars})
-        pat = "^" + analysis.jvm_default_token_pattern().replace("]+", "]$")
-        got = (
-            spark.createDataFrame(pdf)
-            .select("cp", F.col("ch").rlike(pat).alias("m"))
-            .toPandas()
-            .set_index("cp")["m"]
-        )
-        exp = pd.Series(
-            [c.isalnum() for c in chars], index=cps, name="m"
-        ).groupby(level=0).first()
-        diff = got.groupby(level=0).first().astype(bool).compare(exp.astype(bool))
-        assert diff.empty, f"class divergence at codepoints {list(diff.index)[:20]}"
-
-
-class TestFieldnormCol:
-    def test_parity_sweep(self, spark):
-        counts = np.unique(np.concatenate([
-            np.arange(0, 5000),
-            np.logspace(0, 31, 600, base=2).astype(np.int64),
-            np.array([2**31 - 1, 2_013_265_944, 2_013_265_943,
-                      2_013_265_945, 2**31]),
-        ]))
-        pdf = pd.DataFrame({"tc": counts})
-        got = (
-            spark.createDataFrame(pdf)
-            .select("tc", fieldnorm_id_col(F.col("tc")).alias("fid"))
-            .toPandas()
-            .sort_values("tc")["fid"]
-            .to_numpy()
-        )
-        exp = fieldnorm_to_id(np.sort(counts)).astype(np.int64)
-        np.testing.assert_array_equal(got.astype(np.int64), exp)
+from tests.test_arrow_tokenize import EDGE_TEXTS
 
 
 def _docmap_frames(spark, pdf, cfg_jvm, cfg_py, cols):
@@ -160,6 +45,7 @@ class TestDocmapParity:
     def test_single_field(self, spark, corpus):
         cfg = IndexConfig(n_segments=4, jvm_tokenize=True)
         cfg_py = IndexConfig(n_segments=4, jvm_tokenize=False)
+        assert cfg.uses_arrow_kernel() and not cfg_py.uses_arrow_kernel()
         cols = ["conv_id", "turn_idx", "segment_ord", "doc_id",
                 "terms", "token_count", "fieldnorm_id"]
         a, b = _docmap_frames(spark, corpus, cfg, cfg_py, cols)
