@@ -427,9 +427,10 @@ def _query_scaling_run(cores: int, idx_dir: str) -> dict:
     """QUERY-throughput leg at `cores` over a prebuilt transcripts index
     (the north rule's criterion covers indexing AND query throughput
     scaling).  Throughput, not latency: the whole 64-query batch runs
-    through `Searcher.search_batch` as ONE distributed pass (one pruned
-    scan, one kernel stage that decodes shared postings once, one k-row
-    shuffle) — a serving cluster's steady state.  The per-query-job
+    through `BatchSearchServer.search_many` as ONE Spark job (cluster-
+    sized kernel tasks that read their segments' postings with pyarrow
+    and decode shared postings once, then a driver-side per-query top-k
+    merge) — a serving cluster's steady state.  The per-query-job
     alternative bills the driver's fixed ~0.3-0.7 s scheduling cost once
     PER QUERY, a serial floor that caps scaling at any core count
     (measured 0.545 at 2->8 cores; 4x16-query batches still carried

@@ -108,17 +108,28 @@ def shingles_df(df: DataFrame, key_col: str, text_col: str = "text",
 
 
 def ngram_jaccard_pairs(df: DataFrame, key_col: str, text_col: str = "text",
-                        n: int = 3, threshold: float = 0.6) -> DataFrame:
+                        n: int = 3, threshold: float = 0.6,
+                        max_df: int | None = 1024) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (key_a < key_b, jaccard >= thr).
 
     Plan: shingle-explode -> self-join **on shingle** (co-occurrence join,
     never an all-pairs cross join) -> count common shingles -> jaccard from
     per-doc shingle counts.  Scale: the join key is the shingle, so cost is
-    sum over shingles of c^2 where c = docs sharing that shingle; hot
-    (stopword-ish) shingles should be pre-filtered at 100 TB (df-cap), and
-    the MinHash/LSH variant below replaces this entirely beyond ~10^7 docs.
+    sum over shingles of c^2 where c = docs sharing that shingle; the
+    MinHash/LSH variant below replaces this entirely beyond ~10^7 docs.
+
+    `max_df` drops shingles held by more than that many docs before the
+    self-join — the hot-shingle c^2 guard (a boilerplate line shared by
+    10^4 docs alone emits 5*10^7 pairs).  Jaccard is then taken over each
+    doc's remaining shingles, the way stopwords leave a term vector: a
+    doc whose shingles are all hot pairs with nothing.  The DEFAULT is
+    the scale-safe cap; pass None explicitly for exact Jaccard over every
+    shingle (what the oracle contract entry does).
     """
-    sh = shingles_df(df, key_col, text_col, n).cache()
+    sh = shingles_df(df, key_col, text_col, n)
+    if max_df is not None:
+        sh = _cap_buckets(sh, ["shingle"], max_df)
+    sh = sh.cache()
     sizes = sh.groupBy("key").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")

@@ -1,15 +1,16 @@
 """Searcher — query execution over a built index.
 
-Spark trace (SURVEY.md §3.2): logical query -> term-bucket partition-pruned
-scan of the postings table (Catalyst pushes `tbucket isin` to directory
-pruning and `term isin` to parquet row-group stats — the term-dict FST
-analogue) -> global doc_freqs summed on the driver from the terms table's
-per-segment rows, a pruned pyarrow read with no Spark job (the reference
-computes global stats once per query, searcher.rs:133-146,
-bm25.rs:108-144) -> per-segment exact top-k kernel (kernel.py) in
-applyInPandas -> global merge ordered by (score desc, segment_ord asc,
-doc_id asc) — the reference's merge_fruits tie-break
-(top_score_collector.rs:28-30,648-655).
+Spark trace (SURVEY.md §3.2): logical query -> global doc_freqs summed
+on the driver from the terms table's per-segment rows, a pruned pyarrow
+read with no Spark job (the reference computes global stats once per
+query, searcher.rs:133-146, bm25.rs:108-144) -> ONE Spark job of
+cluster-sized tasks, each reading its segments' postings for the query's
+terms with pyarrow (tbucket directory + row-group pruning, the term-dict
+FST analogue) and running the per-segment exact top-k kernel
+(kernel.py) -> global merge on the driver ordered by (score desc,
+segment_ord asc, doc_id asc) — the reference's merge_fruits tie-break
+(top_score_collector.rs:28-30,648-655) -> display keys from one pruned
+docmap read on the driver.
 
 Two execution paths:
 
@@ -22,13 +23,16 @@ Two execution paths:
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import FloatType, IntegerType, StructField, StructType
 
 from tantivy_spark.config import IndexConfig
 from tantivy_spark.functions.bm25 import Bm25Params, Bm25Weight
@@ -333,12 +337,21 @@ def _segment_dead_docs(index_dir: str, seg: int, term_tombs: list,
     return dead
 
 
+def _empty_hits() -> pd.DataFrame:
+    return pd.DataFrame({
+        "query_idx": pd.Series(dtype="int32"),
+        "segment_ord": pd.Series(dtype="int32"),
+        "doc_id": pd.Series(dtype="int32"),
+        "score": pd.Series(dtype="float32"),
+    })
+
+
 def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
                          dead) -> pd.DataFrame:
-    """Evaluate the compiled batch programs over one segment's postings
-    dict — the shared kernel body of `search_batch`'s two executions
-    (shuffle-feed and direct pyarrow read).  Scores/tie-breaks are the
-    exact per-segment kernels `search` uses."""
+    """Evaluate the compiled programs (`Searcher._batch_program`) over
+    one segment's postings dict — the body of every distributed kernel
+    task (`Searcher._run_programs`).  Scores/tie-breaks are the exact
+    per-segment kernels the serving reader runs."""
     def clause(occur, kind, payload, w):
         if kind == "term":
             return K.Clause(occur, payload, w, tp.get(payload))
@@ -351,9 +364,19 @@ def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
     qis, seg_docs, seg_scores = [], [], []
     for qi, prog in live:
         if prog[0] == "phrase":
-            _, slots, slop, w = prog
+            _, slots, slop, w, last = prog
+            # a slot is one term, or a tuple of alternative terms (regex
+            # phrase); `last` holds the phrase-prefix expansions
+            postings = [tp.get(s) if isinstance(s, str)
+                        else [tp[t] for t in s if t in tp] or None
+                        for s in slots]
+            alts = None
+            if last is not None:
+                postings.append(None)
+                alts = [tp[t] for t in last if t in tp]
             docs, scores = K.segment_topk_phrase(
-                [tp.get(t) for t in slots], w, k, slop=slop, dead=dead)
+                postings, w, k, slop=slop, last_alternatives=alts,
+                dead=dead)
         elif prog[0] == "bool":
             _, spec, msm, const_score = prog
             cl = [clause(o, kind, payload, w)
@@ -373,12 +396,7 @@ def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
             seg_docs.append(docs.astype(np.int32))
             seg_scores.append(scores.astype(np.float32))
     if not qis:
-        return pd.DataFrame({
-            "query_idx": pd.Series(dtype="int32"),
-            "segment_ord": pd.Series(dtype="int32"),
-            "doc_id": pd.Series(dtype="int32"),
-            "score": pd.Series(dtype="float32"),
-        })
+        return _empty_hits()
     qi_all = np.concatenate(qis)
     return pd.DataFrame({
         "query_idx": qi_all,
@@ -386,6 +404,45 @@ def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
         "doc_id": np.concatenate(seg_docs),
         "score": np.concatenate(seg_scores),
     })
+
+
+def _program_terms(prog) -> tuple[set, bool]:
+    """(every term a compiled program reads, whether it reads positions)."""
+    if prog[0] == "phrase":
+        _, slots, _, _, last = prog
+        terms = set(last or ())
+        for s in slots:
+            terms.update((s,) if isinstance(s, str) else s)
+        return terms, True
+    arms = prog[1] if prog[0] == "dismax" else [c[1:] for c in prog[1]]
+    terms, phrase = set(), False
+    for kind, payload, _ in arms:
+        if kind == "phrase":
+            terms.update(payload[0])
+            phrase = True
+        else:
+            terms.add(payload)
+    return terms, phrase
+
+
+def fetch_doc_keys(index_dir: str, key_cols, hits: pd.DataFrame
+                   ) -> pd.DataFrame:
+    """Inner-join the key columns onto <= k (segment_ord, doc_id) hits —
+    one docmap read pruned by `segment_ord in` (partition directories)
+    and `doc_id in` (row-group stats), the docstore role.  Keeps the
+    row order of `hits`; shared by both engines' key fetch."""
+    keys = list(key_cols)
+    if not len(hits):
+        return hits.assign(**{c: pd.Series(dtype=object) for c in keys})
+    segs = sorted(int(s) for s in hits["segment_ord"].unique())
+    docs = sorted(int(d) for d in hits["doc_id"].unique())
+    dm = pq.read_table(
+        os.path.join(index_dir, "docmap"),
+        columns=keys + ["doc_id", "segment_ord"],
+        filters=[("segment_ord", "in", segs), ("doc_id", "in", docs)],
+    ).to_pandas()
+    dm["segment_ord"] = dm["segment_ord"].astype(np.int32)
+    return hits.merge(dm, on=["segment_ord", "doc_id"], how="inner")
 
 
 def _collect_query_terms(q: L.Query, out: set) -> None:
@@ -603,6 +660,7 @@ class Searcher(Bm25StatsMixin):
         self._has_doc_tombs: bool | None = None
         self._dead_df: DataFrame | None = None
         self._postings_df: DataFrame | None = None
+        self._key_fields_cache: list | None = None
         self._live_segments = {
             int(s["segment_ord"]) for s in self.manifest["segments"]
         }
@@ -1049,8 +1107,18 @@ class Searcher(Bm25StatsMixin):
 
     def search(self, query: L.Query, k: int = 10, mode: str = "daat",
                fetch_keys: bool = True) -> DataFrame:
-        """Top-k by (score desc, segment_ord asc, doc_id asc)."""
-        topk = self.top_docs_frame(query, k=k, mode=mode)
+        """Top-k by (score desc, segment_ord asc, doc_id asc), with the
+        key columns when `fetch_keys`.  Kernel-family queries run as a
+        batch of one (`_run_programs`: one Spark job) and fetch their
+        keys on the driver (`fetch_doc_keys`), returning a local relation;
+        the full-scan paths (match-all, expansion unions, TAAT, nested
+        trees) broadcast-join their distributed top-k to the docmap."""
+        topk = self._top_docs(query, k, mode)
+        if isinstance(topk, pd.DataFrame):
+            if fetch_keys:
+                topk = fetch_doc_keys(self.index_dir, self.cfg.key_cols,
+                                      topk)
+            return self._local_frame(topk, fetch_keys)
         if not fetch_keys:
             return topk
         key_cols = list(self.cfg.key_cols)
@@ -1061,11 +1129,99 @@ class Searcher(Bm25StatsMixin):
             F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
         )
 
+    def _key_fields(self) -> list:
+        """Spark types of the key columns, from the docmap's pyarrow
+        schema (read once per searcher; no Spark job)."""
+        if self._key_fields_cache is None:
+            arrow = ds.dataset(os.path.join(self.index_dir, "docmap"),
+                               partitioning="hive").schema
+            self._key_fields_cache = [
+                StructField(c, from_arrow_type(arrow.field(c).type))
+                for c in self.cfg.key_cols]
+        return self._key_fields_cache
+
+    def _local_frame(self, hits: pd.DataFrame, keyed: bool) -> DataFrame:
+        """Driver-side hits -> a local-relation DataFrame (no Spark job
+        to build or collect it, empty results included: the frame goes
+        in as an Arrow table, which pyspark never routes through an RDD)
+        with the columns and types the distributed plans had:
+        [query_idx,] segment_ord, doc_id, score — or, `keyed`,
+        segment_ord, doc_id, keys..., [query_idx,] score, the order a
+        docmap join produced."""
+        ids = [StructField("segment_ord", IntegerType()),
+               StructField("doc_id", IntegerType())]
+        qi = ([StructField("query_idx", IntegerType())]
+              if "query_idx" in hits.columns else [])
+        score = [StructField("score", FloatType())]
+        schema = StructType(ids + self._key_fields() + qi + score if keyed
+                            else qi + ids + score)
+        return self.spark.createDataFrame(
+            pa.Table.from_pandas(hits[schema.names], preserve_index=False),
+            schema)
+
+    def _run_programs(self, live: list, terms: "set | list", hot: set,
+                      k: int) -> pd.DataFrame:
+        """Execute compiled programs `live` = [(query_idx, program)] as
+        ONE Spark job: the live segment ords are parallelized over
+        cluster-sized tasks, each reading its segments' pruned postings
+        (and tombstone slices) with pyarrow and running the per-segment
+        kernels; the driver merges the <= n_queries * k * n_segments
+        candidates into each query's exact global top-k by (score desc,
+        segment_ord asc, doc_id asc).  Returns (query_idx, segment_ord,
+        doc_id, score) sorted by query then rank.  Requires executors to
+        reach the index files (local/shared fs — the same contract as
+        build_index_direct).  The task closure captures only plain data
+        — never `self` (the SparkSession doesn't pickle)."""
+        segs = sorted(self._live_segments)
+        if not live or not terms or not segs:
+            return _empty_hits()
+        index_dir = self.index_dir
+        n_buckets = self.cfg.n_term_buckets
+        terms = sorted(terms)
+        with_pos = self.cfg.positions and any(
+            _program_terms(p)[1] for _, p in live)
+        term_tombs = sorted(set(self.tombstones()))
+        has_doc_tombs = self.has_doc_tombstones()
+
+        def run(it):
+            for seg in it:
+                tp = _load_segment_postings(index_dir, seg, terms,
+                                            n_buckets, with_pos, hot)
+                dead = _segment_dead_docs(index_dir, seg, term_tombs,
+                                          n_buckets, has_doc_tombs)
+                yield _eval_batch_programs(live, tp, seg, k, dead)
+
+        # task count scales with the CLUSTER, not the segment count:
+        # per-task cost (closure deserialization of every compiled
+        # program, worker round-trip) is ~constant, so one-task-per-
+        # segment pays it n_segments times at any core count; see
+        # _NPARTS_MULT for the waves-per-core choice
+        sc = self.spark.sparkContext
+        n_parts = max(1, min(len(segs),
+                             _NPARTS_MULT * sc.defaultParallelism))
+        parts = [p for p in sc.parallelize(segs, n_parts)
+                 .mapPartitions(run).collect() if len(p)]
+        if not parts:
+            return _empty_hits()
+        cand = pd.concat(parts, ignore_index=True).sort_values(
+            ["query_idx", "score", "segment_ord", "doc_id"],
+            ascending=[True, False, True, True], kind="stable")
+        return cand.groupby("query_idx", sort=True).head(k).reset_index(
+            drop=True)
+
+    def _kernel_topk(self, query: L.Query, k: int | None) -> pd.DataFrame:
+        """One kernel-family query as a batch of one -> pandas
+        (segment_ord, doc_id, score)."""
+        if k is None:
+            raise ValueError("daat mode needs a finite k (use taat64 for scans)")
+        live, terms, hot = self._compile_batch([query])
+        return self._run_programs(live, terms, hot, k).drop(
+            columns="query_idx")
+
     def _batch_program(self, query: L.Query):
-        """Compile one query of a `search_batch` into a kernel program
-        tuple, mirroring `_top_docs_frame_impl`'s dispatch for the
-        kernel-executable family (score parity with `search` is pinned
-        by tests/test_search_batch.py):
+        """Compile one kernel-family query into the program tuple every
+        distributed DAAT query runs as (`_run_programs`,
+        `_eval_batch_programs`):
 
           ("empty",)                                  — matches nothing
           ("bool", clauses, msm, const_score)         — clauses =
@@ -1074,11 +1230,13 @@ class Searcher(Bm25StatsMixin):
           ("dismax", arms, tie_breaker, top_boost)    — arms =
               [("term", term, weight) |
                ("phrase", (slots, slop), weight)]
-          ("phrase", slots, slop, weight)             — pure phrase
+          ("phrase", slots, slop, weight, last)       — a slot is a term
+              or a tuple of alternative terms (regex phrase); `last` is
+              None or the phrase-prefix expansions of the final slot
 
         Raises ValueError for query types whose plan is not a pruned
-        postings scan (expansion, range, match-all, nested trees) —
-        those run through `search`, which owns their dedicated paths.
+        postings scan (expansion unions, range, match-all, nested trees)
+        — `search` runs those on their DataFrame paths.
         """
         if isinstance(query, L.EmptyQuery):
             return ("empty",)
@@ -1090,7 +1248,48 @@ class Searcher(Bm25StatsMixin):
             w = self._phrase_weight(phrase, phrase_boost)
             if w is None:
                 return ("empty",)
-            return ("phrase", tuple(phrase.phrase_terms), phrase.slop, w)
+            return ("phrase", tuple(phrase.phrase_terms), phrase.slop, w,
+                    None)
+        if isinstance(phrase, L.RegexPhraseQuery):
+            # per-slot regex expansion; the weight follows the reference:
+            # Bm25Weight::for_terms over the RAW pattern terms (df
+            # typically 0 -> max idf constant)
+            slots = []
+            for pat in phrase.patterns:
+                exp = self.expand_regex(pat,
+                                        max_expansions=phrase.max_expansions)
+                if not exp:
+                    return ("empty",)
+                slots.append(tuple(exp))
+            pattern_dfs = self.doc_freqs(sorted(set(phrase.patterns)))
+            w = Bm25Weight.for_terms(
+                [pattern_dfs[p] for p in phrase.patterns],
+                self.total_docs, self.total_tokens, self.params,
+            ).boost_by(phrase_boost)
+            return ("phrase", tuple(slots), 0, w, None)
+        if isinstance(phrase, L.PhrasePrefixQuery):
+            fixed = list(phrase.phrase_terms[:-1])
+            expansions = self.expand_prefix(phrase.phrase_terms[-1],
+                                            phrase.max_expansions)
+            if not expansions:
+                return ("empty",)
+            # weight sums idfs of the fixed terms only
+            # (phrase_prefix_query.rs:116)
+            dfs = self.doc_freqs(sorted(set(fixed)))
+            if any(dfs[t] <= 0 for t in fixed):
+                return ("empty",)
+            if fixed:
+                w = Bm25Weight.for_terms(
+                    [dfs[t] for t in fixed], self.total_docs,
+                    self.total_tokens_for(fixed[0]),
+                    self.params_for(fixed[0]))
+            else:
+                # degenerate single-slot prefix: every expansion scores
+                # like a 1-term phrase with the pseudo weight df=1
+                w = Bm25Weight.for_terms(
+                    [1], self.total_docs, self.total_tokens, self.params)
+            return ("phrase", tuple(fixed), 0, w.boost_by(phrase_boost),
+                    tuple(expansions))
         mixed = _compile_mixed_boolean(query)
         if mixed is not None:
             clauses, msm = mixed
@@ -1144,7 +1343,8 @@ class Searcher(Bm25StatsMixin):
         except NotImplementedError as e:
             raise ValueError(
                 f"search_batch supports the kernel-compilable family "
-                f"(term/boolean/dismax/phrase, boost/const wrapped); "
+                f"(term/boolean/dismax/phrase/regex phrase/phrase prefix, "
+                f"boost/const wrapped); "
                 f"{type(query).__name__} runs through search(): {e}"
             ) from None
         if isinstance(compiled, CompiledDismax):
@@ -1176,17 +1376,7 @@ class Searcher(Bm25StatsMixin):
         all_terms: set[str] = set()
         term_refs: dict = {}
         for _, p in live:
-            prog_terms: set = set()
-            if p[0] == "phrase":
-                prog_terms.update(p[1])
-            elif p[0] == "bool":
-                for _, kind, payload, _ in p[1]:
-                    prog_terms.update(
-                        payload[0] if kind == "phrase" else (payload,))
-            else:
-                for kind, payload, _ in p[1]:
-                    prog_terms.update(
-                        payload[0] if kind == "phrase" else (payload,))
+            prog_terms = _program_terms(p)[0]
             all_terms.update(prog_terms)
             for t in prog_terms:
                 term_refs[t] = term_refs.get(t, 0) + 1
@@ -1194,122 +1384,34 @@ class Searcher(Bm25StatsMixin):
         return live, all_terms, hot
 
     def batch_server(self, k: int = 10) -> "BatchSearchServer":
-        """A standing distributed serving pass over this searcher's
-        snapshot — see BatchSearchServer."""
+        """A batch-serving handle over this searcher's snapshot — see
+        BatchSearchServer."""
         return BatchSearchServer(self, k)
 
     def search_batch(self, queries: "list[L.Query]", k: int = 10,
-                     fetch_keys: bool = False,
-                     via: str = "direct") -> DataFrame:
-        """Execute MANY top-k queries in ONE distributed pass — the
-        throughput entry point (a serving fleet's steady state batches
-        queries; per-query Spark jobs pay the driver's fixed scheduling
-        cost once per query, which caps throughput scaling no matter how
-        many executors exist).
+                     fetch_keys: bool = False) -> DataFrame:
+        """Execute MANY top-k queries in ONE Spark job — the throughput
+        entry point (per-query Spark jobs pay the driver's fixed
+        scheduling cost once per query, which caps throughput scaling no
+        matter how many executors exist).  It is the same executor
+        `search` runs a single kernel-family query on
+        (`_run_programs`): cluster-sized tasks read their segments'
+        postings for the batch's terms with pyarrow and evaluate every
+        query against the shared decode; the driver merges each query's
+        global top-k.
 
-        via="direct" (default): one kernel task PER SEGMENT that reads
-        its segment's postings for the batch's terms DIRECTLY with
-        pyarrow (row-group pruned bucket files — the build_index_direct
-        dataflow applied to serving) and evaluates every query against
-        the shared decode.  No exchange of posting bytes at all: the
-        only shuffled rows are the <= n_queries * k * n_segments
-        candidates into the per-query global top-k (window rank).
-        Requires executors to reach the index files (local/shared fs —
-        same contract as build_index_direct).
-
-        via="feed": the JVM-scan formulation — one pruned postings scan
-        (tbucket partition + term filters pushed down) shuffled to
-        per-segment kernel tasks.  Keep for storage the driver can scan
-        but tasks cannot open directly.
-
-        Returns (query_idx, segment_ord, doc_id, score[, key cols]) with
-        per-query ordering identical to `search(query, k)` — f32 scores
-        and the (score desc, segment_ord asc, doc_id asc) tie-break are
-        bit-equal (pinned by tests/test_search_batch.py, both
-        executions).
+        Returns a local-relation DataFrame (query_idx, segment_ord,
+        doc_id, score), or with `fetch_keys` (segment_ord, doc_id,
+        keys..., query_idx, score), ordered by query_idx then (score
+        desc, segment_ord asc, doc_id asc).  Per query, the f32 scores
+        and tie-break are bit-equal to `ServingSearcher.search` (pinned
+        by tests/test_search_batch.py).
         """
-        from pyspark.sql import Window
-
         live, all_terms, hot = self._compile_batch(queries)
-        schema = "query_idx int, segment_ord int, doc_id int, score float"
-        if not live or not all_terms:
-            out = self.spark.createDataFrame([], schema)
-            return self._batch_fetch_keys(out) if fetch_keys else out
-
-        if via == "direct":
-            per_seg = self._batch_direct(live, sorted(all_terms), hot, k,
-                                         schema)
-        elif via == "feed":
-            def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-                seg = int(pdf["segment_ord"].iloc[0])
-                tp = {}
-                for r in pdf.to_dict("records"):
-                    p = K.TermPostings.from_row(r)
-                    if r["term"] in hot:  # decode shared across queries
-                        p.cache_decoded = True
-                    tp[r["term"]] = p
-                return _eval_batch_programs(live, tp, seg, k, dead)
-
-            pruned = self.pruned_postings(sorted(all_terms))
-            per_seg = self._per_segment(pruned, run_segment, schema)
-        else:
-            raise ValueError(f"via must be 'direct' or 'feed', got {via!r}")
-        w = Window.partitionBy("query_idx").orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id"))
-        topk = (per_seg.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k).drop("_rn"))
-        return self._batch_fetch_keys(topk) if fetch_keys else topk
-
-    def _batch_direct(self, live: list, terms: list, hot: set, k: int,
-                      schema: str) -> DataFrame:
-        """Direct execution of a compiled batch: parallelize the live
-        segment ords, one kernel task per segment, each reading its own
-        pruned postings (and its tombstone slice) with pyarrow.  The
-        task closure captures only plain data — never `self` (the
-        SparkSession doesn't pickle)."""
-        index_dir = self.index_dir
-        n_buckets = self.cfg.n_term_buckets
-        with_pos = self.cfg.positions and any(
-            p[0] == "phrase"
-            or (p[0] == "bool" and any(kind == "phrase"
-                                       for _, kind, _, _ in p[1]))
-            or (p[0] == "dismax" and any(kind == "phrase"
-                                         for kind, _, _ in p[1]))
-            for _, p in live)
-        term_tombs = sorted(set(self.tombstones()))
-        has_doc_tombs = self.has_doc_tombstones()
-        segs = sorted(self._live_segments)
-
-        def run_direct(it):
-            for pdf in it:
-                for seg in pdf["segment_ord"].tolist():
-                    seg = int(seg)
-                    tp = _load_segment_postings(index_dir, seg, terms,
-                                                n_buckets, with_pos, hot)
-                    dead = _segment_dead_docs(index_dir, seg, term_tombs,
-                                              n_buckets, has_doc_tombs)
-                    yield _eval_batch_programs(live, tp, seg, k, dead)
-
-        # task count scales with the CLUSTER, not the segment count:
-        # per-task cost (closure deserialization of every compiled
-        # program, worker round-trip) is ~constant, so one-task-per-
-        # segment pays it n_segments times at any core count; see
-        # _NPARTS_MULT for the waves-per-core choice
-        n_parts = max(1, min(
-            len(segs),
-            _NPARTS_MULT * self.spark.sparkContext.defaultParallelism))
-        seg_df = self.spark.createDataFrame(
-            [(s,) for s in segs], "segment_ord int"
-        ).repartition(n_parts)
-        return seg_df.mapInPandas(run_direct, schema)
-
-    def _batch_fetch_keys(self, topk: DataFrame) -> DataFrame:
-        key_cols = list(self.cfg.key_cols)
-        dm = self.docmap().select("segment_ord", "doc_id", *key_cols)
-        return dm.join(
-            F.broadcast(topk), ["segment_ord", "doc_id"], "inner"
-        ).orderBy("query_idx", F.desc("score"),
-                  F.asc("segment_ord"), F.asc("doc_id"))
+        hits = self._run_programs(live, all_terms, hot, k)
+        if fetch_keys:
+            hits = fetch_doc_keys(self.index_dir, self.cfg.key_cols, hits)
+        return self._local_frame(hits, fetch_keys)
 
     # -- execution paths ------------------------------------------------------
     def doc_tombstones(self) -> list[tuple[int, int]]:
@@ -1374,57 +1476,6 @@ class Searcher(Bm25StatsMixin):
             self._dead_df = df.distinct()
         return self._dead_df
 
-    def _per_segment(self, feed: DataFrame, run_segment, schema: str
-                     ) -> DataFrame:
-        """Run a per-segment kernel over the pruned-postings feed.  With
-        pending address tombstones, the segment's dead doc ids arrive as
-        the cogrouped side of the SAME task (no driver list, no
-        broadcast scaling with |dead|) and the kernel excludes them as an
-        alive bitset — its heap stays k."""
-        # one kernel task per segment: an explicit repartition(n, key) is
-        # exempt from AQE partition coalescing, which otherwise merges the
-        # byte-small but compute-heavy kernel groups into
-        # spark.sql.shuffle.partitions tasks — at high core counts the
-        # merged straggler task sets the stage wall-clock (measured: the
-        # 64-segment batch kernel coalesced to 8 tasks, 1.9 s wall for
-        # 9.7 core-sec).  Catalyst recognizes the hash distribution, so
-        # groupBy adds no second exchange.
-        n_parts = max(len(self._live_segments), 1)
-        feed = feed.repartition(n_parts, "segment_ord")
-        dead = self.dead_docs_df()
-        if dead is None:
-            # run_segment takes (pdf, dead=None): wrap to arity 1, or
-            # applyInPandas would treat it as the (key, pdf) form
-            return feed.groupBy("segment_ord").applyInPandas(
-                lambda pdf: run_segment(pdf), schema)
-
-        # empty frame matching the declared schema (the batch path adds
-        # a query_idx column, so the shape can't be hardcoded)
-        _PD_DTYPES = {"int": "int32", "long": "int64",
-                      "float": "float32", "double": "float64"}
-        empty_cols = {
-            name: pd.Series(dtype=_PD_DTYPES.get(typ, "object"))
-            for name, typ in (c.strip().split()[:2]
-                              for c in schema.split(","))
-        }
-
-        def run_cogrouped(left: pd.DataFrame,
-                          right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0:
-                # segment has tombstones but no postings for these terms
-                return pd.DataFrame(empty_cols)
-            dead_ids = (np.sort(right["doc_id"].to_numpy(np.int64))
-                        if len(right) else None)
-            return run_segment(left, dead_ids)
-
-        # co-partition the dead side identically so the cogroup reuses
-        # the feed's explicit hash distribution instead of re-exchanging
-        # both sides into AQE-coalesced partitions
-        dead = dead.repartition(n_parts, "segment_ord")
-        return feed.groupBy("segment_ord").cogroup(
-            dead.groupBy("segment_ord")
-        ).applyInPandas(run_cogrouped, schema)
-
     def _exclude_dead(self, frame: DataFrame) -> DataFrame:
         """Distributed anti-join of pending address tombstones, for the
         full-scan (TAAT / const-union) paths — applied BEFORE their
@@ -1441,10 +1492,16 @@ class Searcher(Bm25StatsMixin):
         applied inside each path — per-segment kernels receive their
         segment's dead ids as an alive bitset (heap stays k), full-scan
         paths anti-join the distributed dead frame before their top-k."""
-        return self._top_docs_frame_impl(query, k, mode)
+        topk = self._top_docs(query, k, mode)
+        if isinstance(topk, pd.DataFrame):
+            return self._local_frame(topk, False)
+        return topk
 
-    def _top_docs_frame_impl(self, query: L.Query, k: int | None,
-                             mode: str = "daat") -> DataFrame:
+    def _top_docs(self, query: L.Query, k: int | None,
+                  mode: str = "daat") -> "DataFrame | pd.DataFrame":
+        """Dispatch: kernel-family queries return their top-k as a
+        driver-side pandas frame (`_kernel_topk`), the full-scan paths a
+        distributed DataFrame."""
         if isinstance(query, L.AllQuery):
             # _exclude_dead covers BOTH address tombstones and docs
             # containing a tombstoned term (dead_docs_df unions them)
@@ -1456,9 +1513,7 @@ class Searcher(Bm25StatsMixin):
                 .limit(k or self.total_docs)
             )
         if isinstance(query, L.EmptyQuery):
-            return self.spark.createDataFrame(
-                [], "segment_ord int, doc_id int, score float"
-            )
+            return _empty_hits().drop(columns="query_idx")
         # expansion / phrase queries (possibly boosted) take their own path
         phrase, phrase_boost = query, 1.0
         while isinstance(phrase, L.BoostQuery):
@@ -1481,31 +1536,22 @@ class Searcher(Bm25StatsMixin):
             expanded = self.more_like_this_query(phrase)
             if phrase_boost != 1.0:
                 expanded = L.BoostQuery(expanded, phrase_boost)
-            return self.top_docs_frame(expanded, k, mode)
-        if isinstance(phrase, L.PhrasePrefixQuery):
-            if k is None:
-                raise ValueError("phrase query needs a finite k")
-            return self._daat_phrase_prefix(phrase, phrase_boost, k)
-        if isinstance(phrase, L.RegexPhraseQuery):
-            if k is None:
-                raise ValueError("phrase query needs a finite k")
-            return self._daat_regex_phrase(phrase, phrase_boost, k)
-        if isinstance(phrase, L.PhraseQuery):
-            if phrase.slop == 0 and mode != "daat":
+            return self._top_docs(expanded, k, mode)
+        if isinstance(phrase, (L.PhrasePrefixQuery, L.RegexPhraseQuery,
+                               L.PhraseQuery)):
+            if (isinstance(phrase, L.PhraseQuery) and phrase.slop == 0
+                    and mode != "daat"):
                 # the float64 scan handles k=None (count/scan collectors)
                 return self._taat64_phrase(phrase, phrase_boost, k)
             if k is None:
                 raise ValueError("phrase query needs a finite k")
-            # slop matching is a kernel-only path (greedy window count)
-            return self._daat_phrase(phrase, phrase_boost, k)
+            # slop, prefix and regex-slot matching are kernel-only paths
+            return self._kernel_topk(query, k)
 
-        if mode == "daat" and k is not None:
-            mixed = _compile_mixed_boolean(query)
-            if mixed is not None:
-                return self._daat_mixed(mixed, k)
-            mixed_dm = _compile_mixed_dismax(query)
-            if mixed_dm is not None:
-                return self._daat_mixed_dismax(mixed_dm, k)
+        if mode == "daat" and k is not None and (
+                _compile_mixed_boolean(query) is not None
+                or _compile_mixed_dismax(query) is not None):
+            return self._kernel_topk(query, k)
         try:
             spec = compile_query(query)
         except NotImplementedError:
@@ -1515,231 +1561,16 @@ class Searcher(Bm25StatsMixin):
             # _taat64_nested (via _exclude_dead, before its top-k limit
             # — an after-limit anti-join would under-fill k).
             return self._taat64_nested(query, k)
-        # pending term tombstones are excluded by the dead-docs side
-        # input (dead_docs_df unions them with address tombstones), so no
-        # must_not injection is needed — injecting would just decode the
-        # dead terms' postings a second time into the kernel feed
+        # pending term tombstones are excluded by the per-segment dead
+        # sets (_segment_dead_docs / dead_docs_df), so no must_not
+        # injection is needed
         if mode == "daat":
-            if k is None:
-                raise ValueError("daat mode needs a finite k (use taat64 for scans)")
-            return self._daat(spec, k)
+            return self._kernel_topk(query, k)
         elif mode == "taat64":
             if isinstance(spec, CompiledDismax):
                 return self._taat64_dismax(spec, k)
             return self._taat64(spec, k)
         raise ValueError(f"unknown mode {mode}")
-
-    # DAAT: per-segment f32 kernel, global merge
-    def _daat(self, spec: CompiledBoolean | CompiledDismax, k: int) -> DataFrame:
-        if isinstance(spec, CompiledDismax):
-            term_boosts = {t: b for t, b in spec.terms}
-        else:
-            term_boosts = {t: b for _, t, b in spec.clauses}
-        terms = sorted(term_boosts)
-        dfs = self.doc_freqs(terms)
-        weights = {
-            (t, b): self.weight_for(dfs[t], b, t)
-            for t, b in set(
-                (t, b)
-                for t, b in (
-                    spec.terms if isinstance(spec, CompiledDismax)
-                    else [(t, b) for _, t, b in spec.clauses]
-                )
-            )
-        }
-        is_dismax = isinstance(spec, CompiledDismax)
-        clause_spec = (
-            spec.terms if is_dismax else [(o, t, b) for o, t, b in spec.clauses]
-        )
-        min_should = 0 if is_dismax else spec.minimum_should_match
-        const_score = None if is_dismax else spec.const_score
-        tie_breaker = spec.tie_breaker if is_dismax else 0.0
-        dismax_boost = spec.boost if is_dismax else 1.0
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {
-                r["term"]: K.TermPostings.from_row(r)
-                for r in pdf.to_dict("records")
-            }
-            if is_dismax:
-                cl = [
-                    K.Clause("should", t, weights[(t, b)], tp.get(t))
-                    for t, b in clause_spec
-                ]
-                docs, scores = K.segment_topk_dismax(cl, tie_breaker, k,
-                                                     dead=dead)
-                if dismax_boost != 1.0:
-                    scores = (scores * _F32(dismax_boost)).astype(_F32)
-            else:
-                cl = [
-                    K.Clause(o, t, weights[(t, b)], tp.get(t))
-                    for o, t, b in clause_spec
-                ]
-                docs, scores = K.segment_topk(cl, k, min_should, const_score,
-                                              dead=dead)
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(terms)
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
-
-    def _daat_mixed(self, mixed, k: int) -> DataFrame:
-        """f32 kernel path for flat booleans mixing term and phrase
-        clauses: each phrase is evaluated per segment into a virtual
-        posting list (docs, phrase_count, fieldnorm) and joins the boolean
-        kernel as an ArrayPostings clause — PhraseScorer composing inside
-        BooleanWeight (boolean_weight.rs), keeping rank-identical f32
-        scoring for mixed queries instead of falling back to float64
-        TAAT."""
-        clauses, msm = mixed
-        # term tombstones are excluded by the dead-docs side input
-        # (dead_docs_df), not by must_not injection
-        term_set = {p for _, kind, p, _ in clauses if kind == "term"}
-        phrase_terms = {
-            t for _, kind, p, _ in clauses if kind == "phrase"
-            for t in p.phrase_terms
-        }
-        all_terms = sorted(term_set | phrase_terms)
-        dfs = self.doc_freqs(all_terms)
-
-        runner_spec = []  # (occur, kind, payload, weight)
-        for occur, kind, payload, b in clauses:
-            if kind == "term":
-                w = self.weight_for(dfs[payload], b, payload)
-                runner_spec.append((occur, "term", payload, w))
-            else:
-                w = self._phrase_weight(payload, b)
-                if w is None:
-                    # a phrase term is absent from the whole corpus: the
-                    # phrase matches nothing anywhere
-                    if occur == "must":
-                        return self.spark.createDataFrame(
-                            [], "segment_ord int, doc_id int, score float"
-                        )
-                    continue  # should/must_not no-op
-                runner_spec.append(
-                    (occur, "phrase", (tuple(payload.phrase_terms), payload.slop), w)
-                )
-        if not any(o != "must_not" for o, *_ in runner_spec):
-            return self.spark.createDataFrame(
-                [], "segment_ord int, doc_id int, score float"
-            )
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {
-                r["term"]: K.TermPostings.from_row(r)
-                for r in pdf.to_dict("records")
-            }
-            cl = []
-            for occur, kind, payload, w in runner_spec:
-                if kind == "term":
-                    cl.append(K.Clause(occur, payload, w, tp.get(payload)))
-                else:
-                    slots, slop = payload
-                    cand, counts, fns = K.phrase_match_arrays(
-                        [tp.get(t) for t in slots], slop=slop
-                    )
-                    ap = (
-                        K.ArrayPostings(cand, counts, fns)
-                        if len(cand) else None
-                    )
-                    cl.append(K.Clause(occur, " ".join(slots), w, ap))
-            docs, scores = K.segment_topk(cl, k, msm, None, dead=dead)
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(all_terms)
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
-
-    def _daat_mixed_dismax(self, mixed, k: int) -> DataFrame:
-        """DisjunctionMax over term + phrase arms on the f32 kernel —
-        phrase arms become per-segment virtual posting lists."""
-        arms, tie_breaker, top_boost = mixed
-        term_set = {p for kind, p, _ in arms if kind == "term"}
-        phrase_terms = {
-            t for kind, p, _ in arms if kind == "phrase" for t in p.phrase_terms
-        }
-        all_terms = sorted(term_set | phrase_terms)
-        dfs = self.doc_freqs(all_terms)
-        runner_spec = []
-        for kind, payload, b in arms:
-            if kind == "term":
-                runner_spec.append(
-                    ("term", payload, self.weight_for(dfs[payload], b, payload))
-                )
-            else:
-                w = self._phrase_weight(payload, b)
-                if w is None:
-                    continue  # arm matches nothing anywhere
-                runner_spec.append(
-                    ("phrase", (tuple(payload.phrase_terms), payload.slop), w)
-                )
-        if not runner_spec:
-            return self.spark.createDataFrame(
-                [], "segment_ord int, doc_id int, score float"
-            )
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {
-                r["term"]: K.TermPostings.from_row(r)
-                for r in pdf.to_dict("records")
-            }
-            cl = []
-            for kind, payload, w in runner_spec:
-                if kind == "term":
-                    cl.append(K.Clause("should", payload, w, tp.get(payload)))
-                else:
-                    slots, slop = payload
-                    cand, counts, fns = K.phrase_match_arrays(
-                        [tp.get(t) for t in slots], slop=slop
-                    )
-                    ap = K.ArrayPostings(cand, counts, fns) if len(cand) else None
-                    cl.append(K.Clause("should", " ".join(slots), w, ap))
-            docs, scores = K.segment_topk_dismax(cl, tie_breaker, k,
-                                                 dead=dead)
-            if top_boost != 1.0:
-                scores = (scores * _F32(top_boost)).astype(_F32)
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(all_terms)
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
 
     def _weighted_const_union(
         self, term_weights: list[tuple[str, float]], boost: float, k: int | None
@@ -1794,39 +1625,6 @@ class Searcher(Bm25StatsMixin):
             out = out.limit(k)
         return out
 
-    def _daat_phrase(self, phrase: L.PhraseQuery, boost: float, k: int) -> DataFrame:
-        weight = self._phrase_weight(phrase, boost)
-        if weight is None:
-            return self.spark.createDataFrame(
-                [], "segment_ord int, doc_id int, score float"
-            )
-        slots = list(phrase.phrase_terms)
-        slop = phrase.slop
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {r["term"]: K.TermPostings.from_row(r)
-                  for r in pdf.to_dict("records")}
-            docs, scores = K.segment_topk_phrase(
-                [tp.get(t) for t in slots], weight, k, slop=slop, dead=dead
-            )
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(sorted(set(slots)))
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
-
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Term-dict prefix scan, lowest terms first, capped at
         max_expansions (phrase_prefix_query.rs:140-156 range scan).  The
@@ -1840,109 +1638,6 @@ class Searcher(Bm25StatsMixin):
             .collect()
         )
         return [r["term"] for r in rows]
-
-    def _daat_regex_phrase(self, q: L.RegexPhraseQuery, boost: float,
-                           k: int) -> DataFrame:
-        """Per-slot regex expansion, then the alternatives-aware phrase
-        kernel.  Weight follows the reference: Bm25Weight::for_terms over
-        the RAW pattern terms (df typically 0 -> max idf constant)."""
-        empty = self.spark.createDataFrame(
-            [], "segment_ord int, doc_id int, score float"
-        )
-        slot_terms: list[list[str]] = []
-        for pat in q.patterns:
-            exp = self.expand_regex(pat, max_expansions=q.max_expansions)
-            if not exp:
-                return empty
-            slot_terms.append(exp)
-        pattern_dfs = self.doc_freqs(sorted(set(q.patterns)))
-        weight = Bm25Weight.for_terms(
-            [pattern_dfs[p] for p in q.patterns],
-            self.total_docs, self.total_tokens, self.params,
-        ).boost_by(boost)
-        all_terms = sorted({t for alt in slot_terms for t in alt})
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {r["term"]: K.TermPostings.from_row(r)
-                  for r in pdf.to_dict("records")}
-            slots = [
-                [tp[t] for t in alt if t in tp] or [None]
-                for alt in slot_terms
-            ]
-            docs, scores = K.segment_topk_phrase(
-                [alt if alt != [None] else None for alt in slots], weight, k,
-                dead=dead
-            )
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(all_terms)
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
-
-    def _daat_phrase_prefix(self, q: L.PhrasePrefixQuery, boost: float,
-                            k: int) -> DataFrame:
-        empty = self.spark.createDataFrame(
-            [], "segment_ord int, doc_id int, score float"
-        )
-        fixed_terms = list(q.phrase_terms[:-1])
-        expansions = self.expand_prefix(q.phrase_terms[-1], q.max_expansions)
-        if not expansions:
-            return empty
-        # weight sums idfs of the fixed terms only (phrase_prefix_query.rs:116)
-        dfs = self.doc_freqs(sorted(set(fixed_terms))) if fixed_terms else {}
-        if any(dfs[t] <= 0 for t in fixed_terms):
-            return empty
-        if fixed_terms:
-            weight = Bm25Weight.for_terms(
-                [dfs[t] for t in fixed_terms],
-                self.total_docs, self.total_tokens_for(fixed_terms[0]),
-                self.params_for(fixed_terms[0]),
-            ).boost_by(boost)
-        else:
-            # degenerate single-slot prefix: every expansion scores like a
-            # 1-term phrase; use the union's pseudo weight with df=1
-            weight = Bm25Weight.for_terms(
-                [1], self.total_docs, self.total_tokens, self.params
-            ).boost_by(boost)
-
-        def run_segment(pdf: pd.DataFrame, dead=None) -> pd.DataFrame:
-            seg = int(pdf["segment_ord"].iloc[0])
-            tp = {r["term"]: K.TermPostings.from_row(r)
-                  for r in pdf.to_dict("records")}
-            docs, scores = K.segment_topk_phrase(
-                [tp.get(t) for t in fixed_terms] + [None],
-                weight, k,
-                last_alternatives=[tp[t] for t in expansions if t in tp],
-                dead=dead,
-            )
-            return pd.DataFrame(
-                {
-                    "segment_ord": np.full(len(docs), seg, dtype=np.int32),
-                    "doc_id": docs.astype(np.int32),
-                    "score": scores.astype(np.float32),
-                }
-            )
-
-        pruned = self.pruned_postings(sorted(set(fixed_terms) | set(expansions)))
-        per_seg = self._per_segment(
-            pruned, run_segment,
-            schema="segment_ord int, doc_id int, score float"
-        )
-        return per_seg.orderBy(
-            F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")
-        ).limit(k)
 
     def _taat64_phrase(self, phrase: L.PhraseQuery, boost: float,
                        k: int | None) -> DataFrame:
@@ -2389,9 +2084,9 @@ class Searcher(Bm25StatsMixin):
         return pruned.mapInPandas(decode_rows, schema=schema)
 
 
-#: batch task granularity: tasks per core.  ONE wave of cluster-sized
-#: tasks: per-task cost (program/param deserialization, Arrow stream
-#: framing, worker dispatch) measured 15-40 ms each, so 4 waves of small
+#: kernel task granularity: tasks per core.  ONE wave of cluster-sized
+#: tasks: per-task cost (program deserialization, result pickling,
+#: worker dispatch) measured 15-40 ms each, so 4 waves of small
 #: tasks cost more than the last-wave imbalance they'd smooth — segment
 #: groups are uniform-sized (built from equal input splits), leaving
 #: little to smooth.  A/B at 2 and 8 cores both preferred 1.
@@ -2399,108 +2094,26 @@ _NPARTS_MULT = 1
 
 
 class BatchSearchServer:
-    """Standing distributed serving pass — the reader/writer split at
-    cluster scale.  ONE parameterized Spark plan serves every query
-    batch: the per-batch compiled programs travel through a parameter
-    file on shared storage that each task reads at execution time, so
-    the DataFrame (analysis, optimization, codegen, task closure) is
-    built exactly once and every `search_many` call costs only a job
-    submit plus the kernel tasks.
-
-    Two properties make the reuse sound:
-      * the kernel runs in the RESULT stage (no exchange downstream of
-        `mapInPandas`), so Spark re-executes it for every collect — a
-        downstream shuffle would be silently served from reused shuffle
-        files and return the PREVIOUS batch's answers;
-      * the global per-query top-k merge happens on the driver over the
-        <= n_queries * k * n_segments candidate rows, with the identical
-        (score desc, segment_ord asc, doc_id asc) ordering the
-        `search_batch` window applies (parity pinned in
-        tests/test_search_batch.py).
+    """Batch-serving handle over one Searcher snapshot: every
+    `search_many` call compiles its batch on the driver and runs it as
+    ONE Spark job on the searcher's executor (`Searcher._run_programs`),
+    the per-query global top-k merged on the driver with the
+    (score desc, segment_ord asc, doc_id asc) tie-break.
 
     Snapshot semantics mirror Searcher: the segment list and tombstone
     state are pinned at construction (build a new server after commits,
     IndexReader::reload's role)."""
 
     def __init__(self, searcher: "Searcher", k: int = 10):
-        import tempfile
-
         self.searcher = searcher
         self.k = int(k)
-        self._dir = tempfile.mkdtemp(prefix="tantivy_spark_batchsrv_")
-        self._param = os.path.join(self._dir, "programs.pkl")
-        index_dir = searcher.index_dir
-        n_buckets = searcher.cfg.n_term_buckets
-        positions_on = searcher.cfg.positions
-        term_tombs = sorted(set(searcher.tombstones()))
-        has_doc_tombs = searcher.has_doc_tombstones()
-        param_path = self._param
-        segs = sorted(searcher._live_segments)
-
-        def run(it):
-            import pickle
-
-            with open(param_path, "rb") as f:
-                live, terms, hot, with_pos, k_ = pickle.load(f)
-            for pdf in it:
-                for seg in pdf["segment_ord"].tolist():
-                    seg = int(seg)
-                    tp = _load_segment_postings(
-                        index_dir, seg, terms,
-                        n_buckets, with_pos and positions_on, hot)
-                    dead = _segment_dead_docs(
-                        index_dir, seg, term_tombs, n_buckets,
-                        has_doc_tombs)
-                    yield _eval_batch_programs(live, tp, seg, k_, dead)
-
-        sc = searcher.spark.sparkContext
-        n_parts = max(1, min(len(segs),
-                             _NPARTS_MULT * sc.defaultParallelism))
-        schema = "query_idx int, segment_ord int, doc_id int, score float"
-        self._df = searcher.spark.createDataFrame(
-            [(s,) for s in segs], "segment_ord int"
-        ).repartition(n_parts).mapInPandas(run, schema)
 
     def search_many(self, queries: "list[L.Query]") -> pd.DataFrame:
         """Top-k for every query of the batch -> pandas frame
         (query_idx, segment_ord, doc_id, score), per-query ordering
         identical to `search_batch` / per-query `search`."""
-        import pickle
-
         live, all_terms, hot = self.searcher._compile_batch(queries)
-        with_pos = any(
-            p[0] == "phrase"
-            or (p[0] == "bool" and any(kind == "phrase"
-                                       for _, kind, _, _ in p[1]))
-            or (p[0] == "dismax" and any(kind == "phrase"
-                                         for kind, _, _ in p[1]))
-            for _, p in live)
-        empty = pd.DataFrame({
-            "query_idx": pd.Series(dtype="int32"),
-            "segment_ord": pd.Series(dtype="int32"),
-            "doc_id": pd.Series(dtype="int32"),
-            "score": pd.Series(dtype="float32"),
-        })
-        if not live or not all_terms:
-            return empty
-        tmp = self._param + ".tmp"
-        with open(tmp, "wb") as f:
-            pickle.dump((live, sorted(all_terms), hot, with_pos, self.k),
-                        f)
-        os.replace(tmp, self._param)
-        cand = self._df.toPandas()
-        if not len(cand):
-            return empty
-        # exact global top-k per query: same ordering keys as the
-        # search_batch window (f32 score desc, segment_ord, doc_id)
-        cand = cand.sort_values(
-            ["query_idx", "score", "segment_ord", "doc_id"],
-            ascending=[True, False, True, True], kind="stable")
-        out = cand.groupby("query_idx", sort=True).head(self.k)
-        return out.reset_index(drop=True)
+        return self.searcher._run_programs(live, all_terms, hot, self.k)
 
     def close(self) -> None:
-        import shutil
-
-        shutil.rmtree(self._dir, ignore_errors=True)
-
+        """Nothing to release; kept so callers can close any server."""

@@ -83,6 +83,7 @@ from tantivy_spark.operators.search import (
     _fuzzy_distances_batch,
     _regex_literal_prefix,
     compile_query,
+    fetch_doc_keys,
 )
 from tantivy_spark.plans import logical as L
 
@@ -1147,7 +1148,8 @@ class ServingSearcher(Bm25StatsMixin):
 
     def _search_phrase_prefix(self, q: L.PhrasePrefixQuery, boost: float,
                               k: int) -> pd.DataFrame:
-        """Mirror of Searcher._daat_phrase_prefix: weight sums the FIXED
+        """In-process twin of the phrase-prefix program of
+        Searcher._batch_program: weight sums the FIXED
         terms' idfs only (phrase_prefix_query.rs:116); the last slot is a
         union of the prefix expansions."""
         if not self.cfg.positions:
@@ -1216,7 +1218,8 @@ class ServingSearcher(Bm25StatsMixin):
 
     def _search_regex_phrase(self, q: L.RegexPhraseQuery, boost: float,
                              k: int) -> pd.DataFrame:
-        """Mirror of Searcher._daat_regex_phrase: per-slot regex
+        """In-process twin of the regex-phrase program of
+        Searcher._batch_program: per-slot regex
         expansion, alternatives-aware phrase kernel; weight over the RAW
         pattern terms (df typically 0 -> max idf constant)."""
         if not self.cfg.positions:
@@ -1258,7 +1261,8 @@ class ServingSearcher(Bm25StatsMixin):
         return self._merge_topk(parts, k)
 
     def _search_mixed(self, mixed, k: int) -> pd.DataFrame:
-        """Mirror of Searcher._daat_mixed: flat booleans mixing term and
+        """In-process twin of the mixed "bool" program of
+        Searcher._batch_program: flat booleans mixing term and
         phrase clauses on the f32 kernel — each phrase evaluated into a
         virtual ArrayPostings clause (PhraseScorer composing inside
         BooleanWeight, boolean_weight.rs)."""
@@ -1330,7 +1334,8 @@ class ServingSearcher(Bm25StatsMixin):
         return self._merge_topk(parts, k)
 
     def _search_mixed_dismax(self, mixed, k: int) -> pd.DataFrame:
-        """Mirror of Searcher._daat_mixed_dismax: DisjunctionMax over
+        """In-process twin of the mixed "dismax" program of
+        Searcher._batch_program: DisjunctionMax over
         term + phrase arms on the f32 kernel."""
         arms, tie_breaker, top_boost = mixed
         term_set = {p for kind, p, _ in arms if kind == "term"}
@@ -1684,17 +1689,9 @@ class ServingSearcher(Bm25StatsMixin):
 
     def _fetch_keys(self, topk: pd.DataFrame) -> pd.DataFrame:
         """Join the key columns for <= k addresses — one pruned docmap
-        read (segment-dir + doc_id row-group pruning), the docstore role."""
-        keys = list(self.cfg.key_cols)
-        segs = sorted(int(s) for s in topk["segment_ord"].unique())
-        docs = sorted(int(d) for d in topk["doc_id"].unique())
-        t2 = pq.read_table(
-            os.path.join(self.index_dir, "docmap"),
-            columns=keys + ["doc_id", "segment_ord"],
-            filters=[("segment_ord", "in", segs), ("doc_id", "in", docs)],
-        ).to_pandas()
-        t2["segment_ord"] = t2["segment_ord"].astype(np.int32)
-        out = topk.merge(t2, on=["segment_ord", "doc_id"], how="inner")
+        read (search.fetch_doc_keys, shared with the distributed
+        Searcher)."""
+        out = fetch_doc_keys(self.index_dir, self.cfg.key_cols, topk)
         return out.sort_values(
             ["score", "segment_ord", "doc_id"],
             ascending=[False, True, True], kind="stable",

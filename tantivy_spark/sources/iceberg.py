@@ -39,6 +39,7 @@ import os
 import re
 import time
 import uuid
+import warnings
 
 from . import avro
 
@@ -413,8 +414,12 @@ def _write_metadata(table_path: str, metadata: dict, version: int) -> str:
     next commit advances the hint (stale, never torn — the pinned
     reader semantics), while WRITERS always resolve
     `_latest_metadata_file()` so the committed snapshot is never built
-    over or lost.  The hint write is monotonic: a delayed committer
-    never regresses a newer hint a racing committer already wrote."""
+    over or lost.  The hint write is best-effort monotonic: a committer
+    replaces the hint only with a higher version than the one it read,
+    but the read and the replace are not one atomic step (no lock), so
+    two committers racing between them can leave the lower version in
+    place.  Readers then lag behind until the next commit's hint write;
+    writers never trust the hint."""
     md = os.path.join(table_path, "metadata")
     os.makedirs(md, exist_ok=True)
     meta_path = os.path.join(md, f"v{version}.metadata.json")
@@ -1184,6 +1189,7 @@ def _tombstone_v2_deletes(spark, index_dir: str, cfg,
     # |dead|-proportional frames are shuffle-pinned throughout (never
     # broadcast — the same discipline as the read path and the engine's
     # own dead_docs_df handling)
+    row_cols = [*key_cols, "__file", "__pos"]
     doomed = []
     if pos:
         doomed.append(
@@ -1191,13 +1197,25 @@ def _tombstone_v2_deletes(spark, index_dir: str, cfg,
                 _pos_delete_victims(spark, pos, mapping)
                 .hint("shuffle_hash"),
                 ["__file", "__pos"], "left_semi")
-            .select(*key_cols))
+            .select(*row_cols))
     for gcols, ds in sorted(eq_groups.items()):
         ed = _eq_delete_frame(spark, gcols, ds).hint("shuffle_hash")
         doomed.append(base.join(ed, _eq_delete_cond(base, ed, gcols),
                                 "left_semi")
-                      .select(*key_cols))
-    doomed_keys = reduce(lambda a, b: a.unionByName(b), doomed).distinct()
+                      .select(*row_cols))
+    doomed_rows = reduce(lambda a, b: a.unionByName(b),
+                         doomed).distinct().persist()
+    # tombstones address docs by key, which assumes key_cols are unique:
+    # doomed rows sharing a key mean every indexed doc with that key dies
+    n_rows, n_keys = doomed_rows.agg(
+        F.count(F.lit(1)), F.count_distinct(F.struct(*key_cols))).first()
+    if n_keys < n_rows:
+        warnings.warn(
+            f"{n_rows} v2-deleted rows carry only {n_keys} distinct "
+            f"key_cols {key_cols} values: the keys are not unique, so "
+            "every indexed doc sharing a deleted row's key is tombstoned",
+            stacklevel=2)
+    doomed_keys = doomed_rows.select(*key_cols).distinct()
     addrs = (
         spark.read.parquet(os.path.join(index_dir, "docmap"))
         .select(*key_cols, "segment_ord", "doc_id")
@@ -1209,6 +1227,7 @@ def _tombstone_v2_deletes(spark, index_dir: str, cfg,
         .persist()
     )
     n = addrs.count()
+    doomed_rows.unpersist()
     if n:
         addrs.write.mode("append").parquet(tombstones_docs_path(index_dir))
     addrs.unpersist()

@@ -76,9 +76,9 @@ def test_delete_all_documents(spark, small_index):
 def test_mass_delete_is_scale_safe(spark, tmp_path):
     """Deleting ~20% of a 100k-doc corpus must stay distributed end to
     end: delete_query writes matches without collecting them, the DAAT
-    plan keeps its global limit at k (no k+|dead| over-fetch), the dead
-    ids reach the kernel as a cogrouped side input (no broadcast scaling
-    with |dead|), and the driver never materializes the dead list."""
+    top-k stays k live docs (no k+|dead| over-fetch: each kernel task
+    reads its own segment's dead ids as an alive bitset), and the
+    driver never materializes the dead list."""
     from pyspark.sql import functions as F
 
     n_docs, n_dead = 100_000, 20_000
@@ -98,17 +98,12 @@ def test_mass_delete_is_scale_safe(spark, tmp_path):
     assert delete_query(spark, idx, L.TermQuery("kill")) == n_dead
 
     s = Searcher(spark, idx)
-    frame = s.top_docs_frame(L.TermQuery("common"), k=10, mode="daat")
-    plan = frame._jdf.queryExecution().executedPlan().toString()
-    # global top-k stays k, not k + |dead|
-    assert "limit=10" in plan
-    # dead ids are a cogrouped per-segment side input, not a broadcast
-    assert "FlatMapCoGroupsInPandas" in plan
-    assert "BroadcastExchange" not in plan
-
-    rows = frame.collect()
+    rows = s.top_docs_frame(L.TermQuery("common"), k=10,
+                            mode="daat").collect()
+    # the global top-k is k docs, not k + |dead|
     assert len(rows) == 10
     live = s.search(L.TermQuery("common"), k=10).collect()
+    assert len(live) == 10
     assert all(int(r["k"][1:]) % 5 != 0 for r in live)
     assert s.count(L.TermQuery("kill")) == 0
     assert s.count(L.TermQuery("common")) == n_docs - n_dead

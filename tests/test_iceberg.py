@@ -272,6 +272,23 @@ def test_sync_honors_equality_deletes(spark, tmp_path):
     assert Searcher(spark, idx).count(TermQuery("hello")) == 77
 
 
+def test_sync_warns_on_non_unique_delete_keys(spark, tmp_path):
+    """Tombstones address indexed docs by key_cols; when two rows a v2
+    delete dooms share one key, the sync says so (every doc with that
+    key is tombstoned, not only the deleted rows)."""
+    from tantivy_spark.config import IndexConfig
+
+    path = str(tmp_path / "tbl")
+    idx = str(tmp_path / "idx")
+    cfg = IndexConfig(n_term_buckets=4, key_cols=("role",))
+    iceberg.write_table(spark, _mk_df(spark, 20), path)
+    iceberg.sync_index(spark, path, idx, cfg)
+    iceberg.commit_equality_deletes(
+        path, ["conv_id"], [{"conv_id": "conv11"}, {"conv_id": "conv12"}])
+    with pytest.warns(UserWarning, match="not unique"):
+        iceberg.sync_index(spark, path, idx, cfg)
+
+
 def test_jvm_reads_real_manifest(spark, table):
     """The Java Avro library reads the actual manifest + manifest-list
     files a commit wrote, and sees the same file list we do."""

@@ -125,8 +125,7 @@ def _oldonly_counts(spark, idx: str) -> list[int]:
     q = L.TermQuery("oldonly")
     s = Searcher(spark, idx)
     return [s.count(q), ServingSearcher(idx).count(q),
-            len(s.search_batch([q], k=1000).collect()),
-            len(s.search_batch([q], k=1000, via="feed").collect())]
+            len(s.search_batch([q], k=1000).collect())]
 
 
 @pytest.mark.parametrize("variant", ["fused", "pandas", "legacy_manifest"])
@@ -165,7 +164,7 @@ def test_segment_ords_never_reused(spark, tmp_root, variant):
     ords = [s["segment_ord"] for s in load_manifest(idx)["segments"]]
     assert ords and min(ords) >= first_ord
     assert load_manifest(idx)["total_docs"] == 40
-    assert _oldonly_counts(spark, idx) == [0, 0, 0, 0]
+    assert _oldonly_counts(spark, idx) == [0, 0, 0]
     assert Searcher(spark, idx).count(L.TermQuery("common")) == 40
 
 

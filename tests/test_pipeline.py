@@ -52,6 +52,35 @@ def test_ngram_jaccard_pairs(docs):
     assert not any(3 in p for p in pairs)
 
 
+def _boilerplate_docs(spark, n_docs: int):
+    """Every doc opens with the same 3-token header (one shingle held by
+    all n_docs) followed by 4 tokens of its own; doc 1 repeats doc 0."""
+    tail = F.when(F.col("id") == 1, F.lit(0)).otherwise(F.col("id"))
+    return spark.range(n_docs).select(
+        "id",
+        F.concat_ws(" ", F.lit("common boiler plate"),
+                    *[F.concat(F.lit(c), tail.cast("string"))
+                      for c in "xyzw"]).alias("text"))
+
+
+def test_ngram_jaccard_hot_shingle_cap(spark):
+    """The default max_df keeps a 10k-doc boilerplate shingle out of the
+    self-join (it alone would emit 5*10^7 pairs) and still finds the
+    exact duplicate; an explicit max_df=None keeps exact semantics."""
+    big = _boilerplate_docs(spark, 10_000)
+    got = {(r["key_a"], r["key_b"]): r["jaccard"] for r in
+           P.ngram_jaccard_pairs(big, "id", threshold=0.1).collect()}
+    assert got == {(0, 1): 1.0}
+
+    small = _boilerplate_docs(spark, 40)
+    exact = P.ngram_jaccard_pairs(small, "id", threshold=0.1, max_df=None)
+    # exact: every pair shares the header shingle, 1 of 9 distinct
+    assert exact.count() == 40 * 39 // 2
+    assert exact.filter(F.col("key_a") == 2).first()["jaccard"] == 1 / 9
+    capped = P.ngram_jaccard_pairs(small, "id", threshold=0.1, max_df=39)
+    assert {(r["key_a"], r["key_b"]) for r in capped.collect()} == {(0, 1)}
+
+
 def test_minhash_lsh_finds_near_dups(docs):
     got = {
         (r["key_a"], r["key_b"])

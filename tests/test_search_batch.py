@@ -1,14 +1,16 @@
-"""search_batch — many queries in ONE distributed pass, rank/score parity.
+"""search_batch — many queries in ONE Spark job, rank/score parity.
 
-The batched path must return, for every query in the batch, BIT-IDENTICAL
-(segment_ord, doc_id, f32 score) top-k to `search(query, k, "daat")`:
-same per-segment kernels, same weights, same (score desc, segment_ord,
-doc_id) tie-break — only the job shape changes (one pruned scan + one
-kernel pass + one k-row shuffle for the whole batch, vs 1-2 Spark jobs
-per query).  This is the serving-throughput primitive: per-query driver
-scheduling is a fixed serial cost that caps throughput scaling no matter
-how many executors exist (measured: 16-query batch at 4-in-flight scaled
-2->8 cores at 0.545; batched, the same workload scales with the kernel).
+For every query in the batch, the batched path must return BIT-IDENTICAL
+(segment_ord, doc_id, f32 score) top-k to the in-process
+`ServingSearcher.search` over the same index: same per-segment kernels,
+same weights, same (score desc, segment_ord, doc_id) tie-break.
+`search_batch` and per-query `search` share one executor
+(`Searcher._run_programs`), so the serving reader is the independent
+reference for both.  This is the serving-throughput primitive: per-query
+driver scheduling is a fixed serial cost that caps throughput scaling no
+matter how many executors exist (measured: 16-query batch at
+4-in-flight scaled 2->8 cores at 0.545; batched, the same workload
+scales with the kernel).
 """
 
 import time
@@ -20,6 +22,7 @@ from tantivy_spark.config import IndexConfig
 from tantivy_spark.operators.build import build_index
 from tantivy_spark.operators.merge import delete_by_address, delete_term
 from tantivy_spark.operators.search import Searcher
+from tantivy_spark.operators.serve import ServingSearcher
 from tantivy_spark.plans import logical as L
 from tantivy_spark.sources.transcripts import transcripts_pdf
 
@@ -62,6 +65,10 @@ QUERIES = [
     # mixed dismax: phrase arm beside a term arm
     L.DisjunctionMaxQuery((L.PhraseQuery(("w0", "w1")),
                            L.TermQuery("w3")), 0.2),
+    # phrase programs whose slots hold alternatives
+    L.RegexPhraseQuery(("w0", "w[12]")),
+    L.BoostQuery(L.PhrasePrefixQuery(("w0", "w1")), 1.5),
+    L.PhrasePrefixQuery(("w",)),
 ]
 
 
@@ -81,8 +88,14 @@ def _individual(s: Searcher, q, k=K):
             for r in rows]
 
 
-def _batched(s: Searcher, queries, k=K, via="direct"):
-    rows = s.search_batch(queries, k=k, via=via).collect()
+def _serving(srv: ServingSearcher, q, k=K):
+    out = srv.search(q, k)
+    return [(int(s), int(d), np.float32(sc)) for s, d, sc in
+            zip(out["segment_ord"], out["doc_id"], out["score"])]
+
+
+def _batched(s: Searcher, queries, k=K):
+    rows = s.search_batch(queries, k=k).collect()
     out = {qi: [] for qi in range(len(queries))}
     for r in rows:
         out[r["query_idx"]].append(
@@ -93,15 +106,16 @@ def _batched(s: Searcher, queries, k=K, via="direct"):
 
 
 def _assert_parity(spark, idx, queries, k=K):
-    """Both executions (direct pyarrow read + JVM-scan feed) must be
-    bit-identical to per-query search()."""
+    """search_batch and per-query search must be bit-identical to the
+    in-process serving reader."""
     s = Searcher(spark, idx)
-    want = [_individual(s, q, k) for q in queries]
-    for via in ("direct", "feed"):
-        got = _batched(s, queries, k, via=via)
-        for qi, q in enumerate(queries):
-            assert got[qi] == want[qi], \
-                f"via={via} query {qi} ({q}): {got[qi]} != {want[qi]}"
+    srv = ServingSearcher(idx)
+    want = [_serving(srv, q, k) for q in queries]
+    got = _batched(s, queries, k)
+    for qi, q in enumerate(queries):
+        assert got[qi] == want[qi], \
+            f"batch query {qi} ({q}): {got[qi]} != {want[qi]}"
+        assert _individual(s, q, k) == want[qi], f"search query {qi} ({q})"
 
 
 def test_batch_matches_individual(spark, built):
@@ -145,10 +159,9 @@ def test_batch_all_empty(spark, built):
 
 
 def test_batch_server_parity(spark, built):
-    """The standing-plan server must return, for several SUCCESSIVE
-    batches (plan reuse across different parameter files), exactly the
-    rows search_batch produces — including that a repeated batch
-    re-executes rather than replaying stale results."""
+    """The batch server must return, for several SUCCESSIVE batches,
+    exactly the rows search_batch produces — including that a repeated
+    batch re-executes rather than replaying stale results."""
     s = Searcher(spark, built)
     srv = s.batch_server(k=K)
     try:

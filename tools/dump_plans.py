@@ -90,18 +90,24 @@ def main() -> None:
 
     sections.append((
         "DAAT top-k (per-segment kernel + global merge)",
-        "One pruned scan, one `applyInPandas` per segment group (the f32 "
-        "block-max kernel), then `TakeOrderedAndProject` over at most "
-        "k×n_segments rows — the only query shuffle is the tiny top-k merge.",
+        "ONE Spark job with no Catalyst plan and no exchange "
+        "(`Searcher._run_programs`: an RDD `mapPartitions` over the live "
+        "segment ords, one cluster-sized wave of tasks). Each task reads "
+        "its segments' postings for the query terms with pyarrow "
+        "(tbucket directory + row-group pruning) and runs the f32 "
+        "block-max kernel; the driver merges the at most k×n_segments "
+        "candidates. The frame handed back is a local relation.",
         fmt(s.top_docs_frame(L.BooleanQuery.union(["table", "value"]), k=10,
                              mode="daat")),
     ))
 
     sections.append((
-        "Doc fetch join (top-k -> keys)",
-        "The k-row side is explicitly **broadcast** so fetching display "
-        "keys is a map-side join against the docmap scan — no shuffle of "
-        "the big side.",
+        "Doc fetch (top-k -> keys)",
+        "Display keys come from one pyarrow docmap read on the driver, "
+        "pruned by `segment_ord in` (partition directories) and "
+        "`doc_id in` (row-group stats) — the serving reader's fetch. The "
+        "result is a local relation: building and collecting it runs no "
+        "Spark job.",
         fmt(s.search(L.TermQuery("table"), k=10, mode="daat")),
     ))
 
