@@ -27,6 +27,7 @@ import os
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -346,51 +347,56 @@ def _empty_hits() -> pd.DataFrame:
     })
 
 
-def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
-                         dead) -> pd.DataFrame:
-    """Evaluate the compiled programs (`Searcher._batch_program`) over
-    one segment's postings dict — the body of every distributed kernel
-    task (`Searcher._run_programs`).  Scores/tie-breaks are the exact
-    per-segment kernels the serving reader runs."""
+def eval_program(prog, get, k: int, dead) -> tuple[np.ndarray, np.ndarray]:
+    """Run one compiled program (`Bm25StatsMixin.compile_program`) over
+    one segment -> its top-k (doc ids, f32 scores) — the per-segment
+    evaluator of both engines: the distributed task
+    (`_eval_batch_programs`) and `ServingSearcher._search_program`.
+    `get(term)` is the term's TermPostings in this segment or None;
+    `dead` the segment's sorted dead doc ids or None."""
     def clause(occur, kind, payload, w):
         if kind == "term":
-            return K.Clause(occur, payload, w, tp.get(payload))
+            return K.Clause(occur, payload, w, get(payload))
         slots, slop = payload
         cand, counts, fns = K.phrase_match_arrays(
-            [tp.get(t) for t in slots], slop=slop)
+            [get(t) for t in slots], slop=slop)
         ap = K.ArrayPostings(cand, counts, fns) if len(cand) else None
         return K.Clause(occur, " ".join(slots), w, ap)
 
+    if prog[0] == "phrase":
+        _, slots, slop, w, last = prog
+        # a slot is one term, or a tuple of alternative terms (regex
+        # phrase); `last` holds the phrase-prefix expansions.  The kernel
+        # drops absent alternatives.
+        postings = [get(s) if isinstance(s, str) else [get(t) for t in s]
+                    for s in slots]
+        alts = None
+        if last is not None:
+            postings.append(None)
+            alts = [get(t) for t in last]
+        return K.segment_topk_phrase(postings, w, k, slop=slop,
+                                     last_alternatives=alts, dead=dead)
+    if prog[0] == "bool":
+        _, spec, msm, const_score = prog
+        return K.segment_topk([clause(*c) for c in spec], k, msm,
+                              const_score, dead=dead)
+    _, spec, tie_breaker, top_boost = prog
+    docs, scores = K.segment_topk_dismax(
+        [clause("should", *arm) for arm in spec], tie_breaker, k, dead=dead)
+    if top_boost != 1.0:
+        scores = (scores * _F32(top_boost)).astype(_F32)
+    return docs, scores
+
+
+def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
+                         dead) -> pd.DataFrame:
+    """`eval_program` of every (query_idx, program) in `live` over one
+    segment's postings dict -> (query_idx, segment_ord, doc_id, score)
+    rows — the body of every distributed kernel task
+    (`Searcher._run_programs`)."""
     qis, seg_docs, seg_scores = [], [], []
     for qi, prog in live:
-        if prog[0] == "phrase":
-            _, slots, slop, w, last = prog
-            # a slot is one term, or a tuple of alternative terms (regex
-            # phrase); `last` holds the phrase-prefix expansions
-            postings = [tp.get(s) if isinstance(s, str)
-                        else [tp[t] for t in s if t in tp] or None
-                        for s in slots]
-            alts = None
-            if last is not None:
-                postings.append(None)
-                alts = [tp[t] for t in last if t in tp]
-            docs, scores = K.segment_topk_phrase(
-                postings, w, k, slop=slop, last_alternatives=alts,
-                dead=dead)
-        elif prog[0] == "bool":
-            _, spec, msm, const_score = prog
-            cl = [clause(o, kind, payload, w)
-                  for o, kind, payload, w in spec]
-            docs, scores = K.segment_topk(cl, k, msm, const_score,
-                                          dead=dead)
-        else:
-            _, spec, tie_breaker, top_boost = prog
-            cl = [clause("should", kind, payload, w)
-                  for kind, payload, w in spec]
-            docs, scores = K.segment_topk_dismax(cl, tie_breaker, k,
-                                                 dead=dead)
-            if top_boost != 1.0:
-                scores = (scores * _F32(top_boost)).astype(_F32)
+        docs, scores = eval_program(prog, tp.get, k, dead)
         if len(docs):
             qis.append(np.full(len(docs), qi, dtype=np.int32))
             seg_docs.append(docs.astype(np.int32))
@@ -406,23 +412,23 @@ def _eval_batch_programs(live: list, tp: dict, seg: int, k: int,
     })
 
 
-def _program_terms(prog) -> tuple[set, bool]:
-    """(every term a compiled program reads, whether it reads positions)."""
+def _program_terms(prog) -> tuple[set, set]:
+    """(every term a compiled program reads, the ones it reads positions
+    of — its phrase-slot terms)."""
     if prog[0] == "phrase":
         _, slots, _, _, last = prog
         terms = set(last or ())
         for s in slots:
             terms.update((s,) if isinstance(s, str) else s)
-        return terms, True
+        return terms, terms
     arms = prog[1] if prog[0] == "dismax" else [c[1:] for c in prog[1]]
-    terms, phrase = set(), False
+    terms, pos = set(), set()
     for kind, payload, _ in arms:
         if kind == "phrase":
-            terms.update(payload[0])
-            phrase = True
+            pos.update(payload[0])
         else:
             terms.add(payload)
-    return terms, phrase
+    return terms | pos, pos
 
 
 def fetch_doc_keys(index_dir: str, key_cols, hits: pd.DataFrame
@@ -448,7 +454,8 @@ def fetch_doc_keys(index_dir: str, key_cols, hits: pd.DataFrame
 def _collect_query_terms(q: L.Query, out: set) -> None:
     """Every literal term a kernel-family query tree references — for
     `search_batch`'s one-read doc-freq prefetch.  Unknown node types are
-    ignored (their `_batch_program` raises later with a clear message)."""
+    ignored (`compile_program` returns None for them, and `search_batch`
+    raises)."""
     if isinstance(q, (L.BoostQuery, L.ConstScoreQuery)):
         _collect_query_terms(q.query, out)
     elif isinstance(q, L.TermQuery):
@@ -635,6 +642,146 @@ class Bm25StatsMixin:
             self.params_for(phrase.phrase_terms[0]),
         )
         return w.boost_by(boost)
+
+    def _require_positions(self) -> None:
+        if not self.cfg.positions:
+            raise ValueError("index has no positions (record option)")
+
+    def compile_program(self, query: L.Query):
+        """Compile one kernel-family query into the program both engines
+        run, per segment, through `eval_program` (the distributed task via
+        `Searcher._run_programs`, the serving reader via
+        `ServingSearcher._search_program`):
+
+          ("empty",)                                  — matches nothing
+          ("bool", clauses, msm, const_score)         — clauses =
+              [(occur, "term", term, weight) |
+               (occur, "phrase", (slots, slop), weight)]
+          ("dismax", arms, tie_breaker, top_boost)    — arms =
+              [("term", term, weight) |
+               ("phrase", (slots, slop), weight)]
+          ("phrase", slots, slop, weight, last)       — a slot is a term
+              or a tuple of alternative terms (regex phrase); `last` is
+              None or the phrase-prefix expansions of the final slot
+
+        Statistics and term-dictionary expansion come from the host
+        engine (`doc_freqs`, `expand_regex`, `expand_prefix`).  Returns
+        None for query types whose plan is not a pruned postings scan
+        (expansion unions, range, match-all, nested trees); raises
+        ValueError for a phrase on an index without positions, before
+        any expansion or postings read.
+        """
+        if isinstance(query, L.EmptyQuery):
+            return ("empty",)
+        phrase, phrase_boost = query, 1.0
+        while isinstance(phrase, L.BoostQuery):
+            phrase_boost *= phrase.boost
+            phrase = phrase.query
+        if isinstance(phrase, (L.PhraseQuery, L.RegexPhraseQuery,
+                               L.PhrasePrefixQuery)):
+            self._require_positions()
+        if isinstance(phrase, L.PhraseQuery):
+            w = self._phrase_weight(phrase, phrase_boost)
+            if w is None:
+                return ("empty",)
+            return ("phrase", tuple(phrase.phrase_terms), phrase.slop, w,
+                    None)
+        if isinstance(phrase, L.RegexPhraseQuery):
+            # per-slot regex expansion; the weight follows the reference:
+            # Bm25Weight::for_terms over the RAW pattern terms (df
+            # typically 0 -> max idf constant)
+            slots = []
+            for pat in phrase.patterns:
+                exp = self.expand_regex(pat,
+                                        max_expansions=phrase.max_expansions)
+                if not exp:
+                    return ("empty",)
+                slots.append(tuple(exp))
+            pattern_dfs = self.doc_freqs(sorted(set(phrase.patterns)))
+            w = Bm25Weight.for_terms(
+                [pattern_dfs[p] for p in phrase.patterns],
+                self.total_docs, self.total_tokens, self.params,
+            ).boost_by(phrase_boost)
+            return ("phrase", tuple(slots), 0, w, None)
+        if isinstance(phrase, L.PhrasePrefixQuery):
+            fixed = tuple(phrase.phrase_terms[:-1])
+            expansions = self.expand_prefix(phrase.phrase_terms[-1],
+                                            phrase.max_expansions)
+            if not expansions:
+                return ("empty",)
+            if fixed:
+                # weight sums idfs of the fixed terms only
+                # (phrase_prefix_query.rs:116)
+                w = self._phrase_weight(L.PhraseQuery(fixed), phrase_boost)
+                if w is None:
+                    return ("empty",)
+            else:
+                # degenerate single-slot prefix: every expansion scores
+                # like a 1-term phrase with the pseudo weight df=1
+                w = Bm25Weight.for_terms(
+                    [1], self.total_docs, self.total_tokens,
+                    self.params).boost_by(phrase_boost)
+            return ("phrase", fixed, 0, w, tuple(expansions))
+        mixed = _compile_mixed_boolean(query)
+        if mixed is not None:
+            self._require_positions()
+            clauses, msm = mixed
+            dfs = self.doc_freqs(sorted(
+                {p for _, kind, p, _ in clauses if kind == "term"}))
+            spec = []
+            for occur, kind, payload, b in clauses:
+                if kind == "term":
+                    spec.append((occur, "term", payload,
+                                 self.weight_for(dfs[payload], b, payload)))
+                else:
+                    w = self._phrase_weight(payload, b)
+                    if w is None:
+                        # absent phrase term: a MUST phrase empties the
+                        # whole query; should/must_not clauses no-op
+                        if occur == "must":
+                            return ("empty",)
+                        continue
+                    spec.append((occur, "phrase",
+                                 (tuple(payload.phrase_terms), payload.slop),
+                                 w))
+            if not any(o != "must_not" for o, *_ in spec):
+                return ("empty",)
+            return ("bool", spec, msm, None)
+        mixed_dm = _compile_mixed_dismax(query)
+        if mixed_dm is not None:
+            self._require_positions()
+            arms, tie_breaker, top_boost = mixed_dm
+            dfs = self.doc_freqs(sorted(
+                {p for kind, p, _ in arms if kind == "term"}))
+            spec = []
+            for kind, payload, b in arms:
+                if kind == "term":
+                    spec.append(("term", payload,
+                                 self.weight_for(dfs[payload], b, payload)))
+                else:
+                    w = self._phrase_weight(payload, b)
+                    if w is None:
+                        continue
+                    spec.append(("phrase",
+                                 (tuple(payload.phrase_terms), payload.slop),
+                                 w))
+            if not spec:
+                return ("empty",)
+            return ("dismax", spec, tie_breaker, top_boost)
+        try:
+            compiled = compile_query(query)
+        except NotImplementedError:
+            return None
+        if isinstance(compiled, CompiledDismax):
+            dfs = self.doc_freqs(sorted({t for t, _ in compiled.terms}))
+            spec = [("term", t, self.weight_for(dfs[t], b, t))
+                    for t, b in compiled.terms]
+            return ("dismax", spec, compiled.tie_breaker, compiled.boost)
+        dfs = self.doc_freqs(sorted({t for _, t, _ in compiled.clauses}))
+        spec = [(o, "term", t, self.weight_for(dfs[t], b, t))
+                for o, t, b in compiled.clauses]
+        return ("bool", spec, compiled.minimum_should_match,
+                compiled.const_score)
 
 
 class Searcher(Bm25StatsMixin):
@@ -1218,146 +1365,6 @@ class Searcher(Bm25StatsMixin):
         return self._run_programs(live, terms, hot, k).drop(
             columns="query_idx")
 
-    def _batch_program(self, query: L.Query):
-        """Compile one kernel-family query into the program tuple every
-        distributed DAAT query runs as (`_run_programs`,
-        `_eval_batch_programs`):
-
-          ("empty",)                                  — matches nothing
-          ("bool", clauses, msm, const_score)         — clauses =
-              [(occur, "term", term, weight) |
-               (occur, "phrase", (slots, slop), weight)]
-          ("dismax", arms, tie_breaker, top_boost)    — arms =
-              [("term", term, weight) |
-               ("phrase", (slots, slop), weight)]
-          ("phrase", slots, slop, weight, last)       — a slot is a term
-              or a tuple of alternative terms (regex phrase); `last` is
-              None or the phrase-prefix expansions of the final slot
-
-        Raises ValueError for query types whose plan is not a pruned
-        postings scan (expansion unions, range, match-all, nested trees)
-        — `search` runs those on their DataFrame paths.
-        """
-        if isinstance(query, L.EmptyQuery):
-            return ("empty",)
-        phrase, phrase_boost = query, 1.0
-        while isinstance(phrase, L.BoostQuery):
-            phrase_boost *= phrase.boost
-            phrase = phrase.query
-        if isinstance(phrase, L.PhraseQuery):
-            w = self._phrase_weight(phrase, phrase_boost)
-            if w is None:
-                return ("empty",)
-            return ("phrase", tuple(phrase.phrase_terms), phrase.slop, w,
-                    None)
-        if isinstance(phrase, L.RegexPhraseQuery):
-            # per-slot regex expansion; the weight follows the reference:
-            # Bm25Weight::for_terms over the RAW pattern terms (df
-            # typically 0 -> max idf constant)
-            slots = []
-            for pat in phrase.patterns:
-                exp = self.expand_regex(pat,
-                                        max_expansions=phrase.max_expansions)
-                if not exp:
-                    return ("empty",)
-                slots.append(tuple(exp))
-            pattern_dfs = self.doc_freqs(sorted(set(phrase.patterns)))
-            w = Bm25Weight.for_terms(
-                [pattern_dfs[p] for p in phrase.patterns],
-                self.total_docs, self.total_tokens, self.params,
-            ).boost_by(phrase_boost)
-            return ("phrase", tuple(slots), 0, w, None)
-        if isinstance(phrase, L.PhrasePrefixQuery):
-            fixed = list(phrase.phrase_terms[:-1])
-            expansions = self.expand_prefix(phrase.phrase_terms[-1],
-                                            phrase.max_expansions)
-            if not expansions:
-                return ("empty",)
-            # weight sums idfs of the fixed terms only
-            # (phrase_prefix_query.rs:116)
-            dfs = self.doc_freqs(sorted(set(fixed)))
-            if any(dfs[t] <= 0 for t in fixed):
-                return ("empty",)
-            if fixed:
-                w = Bm25Weight.for_terms(
-                    [dfs[t] for t in fixed], self.total_docs,
-                    self.total_tokens_for(fixed[0]),
-                    self.params_for(fixed[0]))
-            else:
-                # degenerate single-slot prefix: every expansion scores
-                # like a 1-term phrase with the pseudo weight df=1
-                w = Bm25Weight.for_terms(
-                    [1], self.total_docs, self.total_tokens, self.params)
-            return ("phrase", tuple(fixed), 0, w.boost_by(phrase_boost),
-                    tuple(expansions))
-        mixed = _compile_mixed_boolean(query)
-        if mixed is not None:
-            clauses, msm = mixed
-            dfs = self.doc_freqs(sorted(
-                {p for _, kind, p, _ in clauses if kind == "term"}
-                | {t for _, kind, p, _ in clauses if kind == "phrase"
-                   for t in p.phrase_terms}))
-            spec = []
-            for occur, kind, payload, b in clauses:
-                if kind == "term":
-                    spec.append((occur, "term", payload,
-                                 self.weight_for(dfs[payload], b, payload)))
-                else:
-                    w = self._phrase_weight(payload, b)
-                    if w is None:
-                        # absent phrase term: a MUST phrase empties the
-                        # whole query; should/must_not clauses no-op
-                        if occur == "must":
-                            return ("empty",)
-                        continue
-                    spec.append((occur, "phrase",
-                                 (tuple(payload.phrase_terms), payload.slop),
-                                 w))
-            if not any(o != "must_not" for o, *_ in spec):
-                return ("empty",)
-            return ("bool", spec, msm, None)
-        mixed_dm = _compile_mixed_dismax(query)
-        if mixed_dm is not None:
-            arms, tie_breaker, top_boost = mixed_dm
-            dfs = self.doc_freqs(sorted(
-                {p for kind, p, _ in arms if kind == "term"}
-                | {t for kind, p, _ in arms if kind == "phrase"
-                   for t in p.phrase_terms}))
-            spec = []
-            for kind, payload, b in arms:
-                if kind == "term":
-                    spec.append(("term", payload,
-                                 self.weight_for(dfs[payload], b, payload)))
-                else:
-                    w = self._phrase_weight(payload, b)
-                    if w is None:
-                        continue
-                    spec.append(("phrase",
-                                 (tuple(payload.phrase_terms), payload.slop),
-                                 w))
-            if not spec:
-                return ("empty",)
-            return ("dismax", spec, tie_breaker, top_boost)
-        try:
-            compiled = compile_query(query)
-        except NotImplementedError as e:
-            raise ValueError(
-                f"search_batch supports the kernel-compilable family "
-                f"(term/boolean/dismax/phrase/regex phrase/phrase prefix, "
-                f"boost/const wrapped); "
-                f"{type(query).__name__} runs through search(): {e}"
-            ) from None
-        if isinstance(compiled, CompiledDismax):
-            dfs = self.doc_freqs(sorted({t for t, _ in compiled.terms}))
-            spec = [("term", t, self.weight_for(dfs[t], b, t))
-                    for t, b in compiled.terms]
-            return ("dismax", spec, compiled.tie_breaker, compiled.boost)
-        dfs = self.doc_freqs(sorted({t for _, t, _ in compiled.clauses}))
-        spec = [(o, "term", t, self.weight_for(dfs[t], b, t))
-                for o, t, b in compiled.clauses]
-        return ("bool", spec, compiled.minimum_should_match,
-                compiled.const_score)
-
     def _compile_batch(self, queries: "list[L.Query]"):
         """Compile a query batch -> (live_programs, all_terms:set,
         hot:set).  One driver-side terms-table read prefetches every
@@ -1370,8 +1377,16 @@ class Searcher(Bm25StatsMixin):
             _collect_query_terms(q, pre)
         if pre:
             self.doc_freqs(sorted(pre))
-        programs = [(qi, self._batch_program(q))
-                    for qi, q in enumerate(queries)]
+        programs = []
+        for qi, q in enumerate(queries):
+            prog = self.compile_program(q)
+            if prog is None:
+                raise ValueError(
+                    f"search_batch supports the kernel-compilable family "
+                    f"(term/boolean/dismax/phrase/regex phrase/phrase "
+                    f"prefix, boost/const wrapped); {type(q).__name__} "
+                    f"runs through search()")
+            programs.append((qi, prog))
         live = [(qi, p) for qi, p in programs if p[0] != "empty"]
         all_terms: set[str] = set()
         term_refs: dict = {}
@@ -1530,8 +1545,11 @@ class Searcher(Bm25StatsMixin):
                 phrase_boost, k,
             )
         if isinstance(phrase, L.RegexQuery):
-            terms = self.expand_regex(phrase.pattern)
-            return self._const_union(terms, phrase_boost, k)
+            # ConstScorer per term with SumCombiner: score = boost * the
+            # number of expanded terms in the doc (automaton_weight.rs)
+            return self._weighted_const_union(
+                [(t, 1.0) for t in self.expand_regex(phrase.pattern)],
+                phrase_boost, k)
         if isinstance(phrase, L.MoreLikeThisQuery):
             expanded = self.more_like_this_query(phrase)
             if phrase_boost != 1.0:
@@ -1577,7 +1595,8 @@ class Searcher(Bm25StatsMixin):
     ) -> DataFrame:
         """Union of per-term ConstScorers with SumCombiner where each term
         carries its own const weight — the automaton scorer build
-        (automaton_weight.rs:90-104) with automaton_score != 1 (fuzzy)."""
+        (automaton_weight.rs:90-104): 1/(1+dist) per fuzzy term, 1.0 per
+        regex term (score = boost * matched-term count)."""
         frame = self._weighted_union_frame(term_weights, boost)
         if frame is None:
             return self.spark.createDataFrame(
@@ -1605,39 +1624,25 @@ class Searcher(Bm25StatsMixin):
             .agg((F.sum("w") * F.lit(float(boost))).alias("score"))
         )
 
-    def _const_union(self, terms: list[str], boost: float, k: int | None) -> DataFrame:
-        """Union of const-scorers with sum combining: score = boost * number
-        of matched expanded terms containing the doc — the reference's
-        automaton execution (automaton_weight.rs:90-104: ConstScorer per
-        term, BufferedUnionScorer + SumCombiner)."""
-        if not terms:
-            return self.spark.createDataFrame(
-                [], "segment_ord int, doc_id int, score double"
-            )
-        flat = self.flat_postings(sorted(set(terms)))
-        out = (
-            self._exclude_dead(
-                flat.groupBy("segment_ord", "doc_id")
-                .agg((F.count(F.lit(1)) * F.lit(float(boost))).alias("score")))
-            .orderBy(F.desc("score"), F.asc("segment_ord"), F.asc("doc_id"))
-        )
-        if k is not None:
-            out = out.limit(k)
-        return out
-
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Term-dict prefix scan, lowest terms first, capped at
-        max_expansions (phrase_prefix_query.rs:140-156 range scan).  The
-        startswith prune pushes to parquet stats (StringStartsWith) on the
-        term-sorted terms table."""
-        rows = (
-            self._expansion_terms()
-            .filter(F.col("term").startswith(prefix))
-            .orderBy("term")
-            .limit(max_expansions)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        max_expansions (phrase_prefix_query.rs:140-156 range scan) — a
+        driver-side pyarrow read of the term-sorted terms table, like
+        `doc_freqs`: `term >= prefix` prunes row groups by their term
+        statistics, rows of merged-away segments are skipped.  UTF-8 byte
+        order is code-point order, so the first `max_expansions` distinct
+        terms are the ones a Spark `orderBy("term")` returns.  No Spark
+        job."""
+        table = TERMS_DIR if self._has_terms_table() else "postings"
+        path = os.path.join(self.index_dir, table)
+        if not os.path.isdir(path):
+            return []
+        term = ds.field("term")
+        tab = pq.read_table(path, columns=["term"], filters=(
+            (term >= prefix) & pc.starts_with(term, prefix)
+            & ds.field("segment_ord").isin(sorted(self._live_segments))))
+        return sorted(pc.unique(tab.column("term")).to_pylist()
+                      )[:max_expansions]
 
     def _taat64_phrase(self, phrase: L.PhraseQuery, boost: float,
                        k: int | None) -> DataFrame:

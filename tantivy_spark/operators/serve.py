@@ -14,8 +14,10 @@ the query path:
   skips files that hold none of the segments still to read, and the
   term-sorted rows make a term's postings a searchsorted plus a slice
   (the FST + mmap role);
-* the identical numpy kernels (kernel.py segment_topk / _dismax / _phrase)
-  score each segment — bit-identical f32 results to the distributed path;
+* kernel-family queries compile through the compiler the distributed
+  Searcher uses (`Bm25StatsMixin.compile_program`) and each segment runs
+  through the same evaluator (`search.eval_program`, the numpy kernels of
+  kernel.py) — bit-identical f32 results to the distributed path;
 * a long-lived ServingSearcher caches posting lists per (term, segment),
   decoded posting lists and doc freqs (the mmap-page-cache role), so
   repeat queries never touch the filesystem; reload() keeps the posting
@@ -70,19 +72,15 @@ from tantivy_spark.operators.build import (
     term_bucket_py,
 )
 from tantivy_spark.operators.merge import tombstoned_terms
-from tantivy_spark.functions.bm25 import Bm25Weight
 from tantivy_spark.functions.fieldnorm import FIELD_NORMS_TABLE
 from tantivy_spark.operators.search import (
     Bm25Params,
     Bm25StatsMixin,
-    CompiledBoolean,
-    CompiledDismax,
     _check_rust_regex_compat,
-    _compile_mixed_boolean,
-    _compile_mixed_dismax,
     _fuzzy_distances_batch,
+    _program_terms,
     _regex_literal_prefix,
-    compile_query,
+    eval_program,
     fetch_doc_keys,
 )
 from tantivy_spark.plans import logical as L
@@ -134,6 +132,38 @@ def _column_reader(col):
     return lambda r: arr[r].as_py()
 
 
+def _program_segments(prog, held) -> set[int]:
+    """The segments where a compiled program can match, from `held(term)`
+    (the segments holding the term's postings): a phrase needs every
+    slot, where a slot of alternatives — or the prefix expansions
+    `last` — counts as their union; a bool needs any positive clause and
+    every must clause; a dismax any arm.  Every other segment's kernel
+    would return no rows."""
+    def phrase(slots) -> set[int]:
+        out = None
+        for s in slots:
+            got = (set(held(s)) if isinstance(s, str)
+                   else set().union(*map(held, s)))
+            out = got if out is None else out & got
+        return out or set()
+
+    def arm(kind, payload) -> set[int]:
+        return set(held(payload)) if kind == "term" else phrase(payload[0])
+
+    if prog[0] == "phrase":
+        _, slots, _, _, last = prog
+        return phrase(slots + ((last,) if last is not None else ()))
+    if prog[0] == "dismax":
+        return set().union(*(arm(kind, p) for kind, p, _ in prog[1]))
+    clauses = prog[1]
+    segs = set().union(*(arm(kind, p) for o, kind, p, _ in clauses
+                         if o != "must_not"))
+    for o, kind, p, _ in clauses:
+        if o == "must":
+            segs &= arm(kind, p)
+    return segs
+
+
 class _PostingsFile:
     """One postings file read whole: its rows term-sorted (files are
     written term-sorted; an unsorted one is sorted once here) and its
@@ -182,12 +212,18 @@ class ServingSearcher(Bm25StatsMixin):
     and then served from memory, so a reload after an append commit
     reads only the files the commit added.
 
+    Queries: a kernel-family query is compiled once by the compiler
+    both engines share (`compile_program`, with this reader's doc freqs
+    and its in-RAM vocab for expansion) and run per candidate segment by
+    the shared evaluator (`_search_program`); match-all, the fuzzy/regex
+    const unions and nested trees have in-process paths of their own.
+
     Threads: `reload()` and the cache writes of `load_terms` hold one
     lock, and neither mutates a map a running query iterates — they
     build new maps and assign them.  A query running across a reload is
     still not pinned to one snapshot (it may see the old manifest's
     totals with the new segments' postings); full snapshot pinning is
-    ROADMAP #4."""
+    not done yet."""
 
     # threads only pay on heavy queries: below this many touched postings
     # the per-call GIL/dispatch overhead outweighs the parallel numpy work
@@ -528,6 +564,12 @@ class ServingSearcher(Bm25StatsMixin):
     def doc_freqs(self, terms: list[str]) -> dict[str, int]:
         self.load_terms(terms)
         return {t: self._df_cache[t] for t in terms}
+
+    def _phrase_weight(self, phrase: L.PhraseQuery, boost: float):
+        # a phrase's terms are read with their positions before the
+        # weight's doc freqs need them: one postings-file read, not two
+        self.load_terms(phrase.phrase_terms, with_positions=True)
+        return super()._phrase_weight(phrase, boost)
 
     def warm(self, terms: list[str]) -> "ServingSearcher":
         """Preload posting lists (the reference's Warmer role)."""
@@ -927,24 +969,22 @@ class ServingSearcher(Bm25StatsMixin):
 
     def search(self, query: L.Query, k: int = 10,
                fetch_keys: bool = False) -> pd.DataFrame:
-        """Top-k by (score desc, segment_ord asc, doc_id asc) — identical
-        f32 scores and tie-break to Searcher.search(mode='daat') on the
-        kernel paths; nested trees / range / exists run the same float64
-        formulas as the distributed TAAT fallback.  Dispatch order
-        mirrors Searcher._top_docs_frame_impl."""
+        """Top-k by (score desc, segment_ord asc, doc_id asc).  Match-all,
+        then the fuzzy/regex const unions, then more-like-this, then every
+        kernel-family query as the program `compile_program` builds for
+        both engines (f32 scores and tie-break identical to
+        Searcher.search(mode='daat')), then nested trees / range /
+        exists on the same float64 formulas as the distributed TAAT
+        fallback.  The dispatch mirrors Searcher._top_docs."""
         self._maybe_reload()
-        if isinstance(query, L.AllQuery):
-            out = self._search_all(k)
-            return self._with_keys(out) if fetch_keys else out
-        if isinstance(query, L.EmptyQuery):
-            out = self._merge_topk([], k)
-            return self._with_keys(out) if fetch_keys else out
         boost = 1.0
         q = query
         while isinstance(q, L.BoostQuery):
             boost *= q.boost
             q = q.query
-        if isinstance(q, L.FuzzyTermQuery):
+        if isinstance(query, L.AllQuery):
+            out = self._search_all(k)
+        elif isinstance(q, L.FuzzyTermQuery):
             # per-term const score 1/(1+dist) (automaton_weight.rs:120-133)
             scored = self.expand_fuzzy_scored(
                 q.term, q.distance, q.transposition_cost_one, q.prefix)
@@ -958,36 +998,16 @@ class ServingSearcher(Bm25StatsMixin):
             if boost != 1.0:
                 expanded = L.BoostQuery(expanded, boost)
             return self.search(expanded, k, fetch_keys)
-        elif isinstance(q, L.PhrasePrefixQuery):
-            out = self._search_phrase_prefix(q, boost, k)
-        elif isinstance(q, L.RegexPhraseQuery):
-            out = self._search_regex_phrase(q, boost, k)
-        elif isinstance(q, L.PhraseQuery):
-            out = self._search_phrase(q, boost, k)
         else:
-            mixed = _compile_mixed_boolean(query)
-            mixed_dm = None if mixed is not None else _compile_mixed_dismax(
-                query)
-            if mixed is not None:
-                out = self._search_mixed(mixed, k)
-            elif mixed_dm is not None:
-                out = self._search_mixed_dismax(mixed_dm, k)
+            prog = self.compile_program(query)
+            if prog is None:
+                # nested subtrees / range / exists / term-set-in-tree:
+                # float64 tree evaluation (the general Weight
+                # composition), like the distributed fallback
+                out = self._search_nested(query, k)
             else:
-                try:
-                    # full query: keeps nested boosts
-                    spec = compile_query(query)
-                except NotImplementedError:
-                    # nested subtrees / range / exists / term-set-in-tree:
-                    # float64 tree evaluation (the general Weight
-                    # composition), like the distributed fallback
-                    out = self._search_nested(query, k)
-                else:
-                    # term tombstones are excluded by the per-segment
-                    # dead sets (_dead_by_segment), not must_not clauses
-                    out = self._search_compiled(spec, k)
-        if fetch_keys:
-            out = self._with_keys(out)
-        return out
+                out = self._search_program(prog, k)
+        return self._with_keys(out) if fetch_keys else out
 
     def _with_keys(self, out: pd.DataFrame) -> pd.DataFrame:
         """Key-fetch with a STABLE schema: an empty result still carries
@@ -1059,47 +1079,28 @@ class ServingSearcher(Bm25StatsMixin):
             "score": scores.astype(np.float32),
         })
 
-    def _search_compiled(self, spec, k: int) -> pd.DataFrame:
-        is_dismax = isinstance(spec, CompiledDismax)
-        pairs = (spec.terms if is_dismax
-                 else [(t, b) for _, t, b in spec.clauses])
-        terms = sorted({t for t, _ in pairs})
-        dfs = self.doc_freqs(terms)
-        weights = {(t, b): self.weight_for(dfs[t], b, t)
-                   for t, b in set(pairs)}
-        # segments that can produce rows: every must term present, at
-        # least one positive term present (segment skip list)
-        if is_dismax:
-            must_terms: list[str] = []
-            pos_terms = [t for t, _ in spec.terms]
-        else:
-            must_terms = [t for o, t, _ in spec.clauses if o == "must"]
-            pos_terms = [t for o, t, _ in spec.clauses
-                         if o in ("must", "should")]
-        segs: set[int] = set()
-        for t in pos_terms:
-            segs |= set(self._tp.get(t, {}))
-        for t in must_terms:
-            segs &= set(self._tp.get(t, {}))
+    def _search_program(self, prog, k: int) -> pd.DataFrame:
+        """A compiled kernel-family program (`compile_program`): its terms
+        loaded (positions for phrase-slot terms only), `eval_program` per
+        candidate segment with that segment's dead docs, then the global
+        top-k merge — the same per-segment evaluator as the distributed
+        task."""
+        if prog[0] == "empty":
+            return self._merge_topk([], k)
+        terms, pos_terms = _program_terms(prog)
+        # the compiler's doc_freqs already loaded every term clause
+        self.load_terms(sorted(pos_terms), with_positions=True)
         dead = self._dead_by_segment()
+        # one read of each term's per-segment map: a reload meanwhile
+        # assigns new maps, it does not mutate these
+        tps = {t: self._tp.get(t, {}) for t in terms}
 
         def one(seg: int):
-            if is_dismax:
-                cl = [K.Clause("should", t, weights[(t, b)],
-                               self._tp[t].get(seg))
-                      for t, b in spec.terms]
-                d, sc = K.segment_topk_dismax(
-                    cl, spec.tie_breaker, k, dead=dead.get(seg))
-                if spec.boost != 1.0:
-                    sc = (sc * _F32(spec.boost)).astype(_F32)
-            else:
-                cl = [K.Clause(o, t, weights[(t, b)], self._tp[t].get(seg))
-                      for o, t, b in spec.clauses]
-                d, sc = K.segment_topk(
-                    cl, k, spec.minimum_should_match, spec.const_score,
-                    dead=dead.get(seg))
+            d, sc = eval_program(prog, lambda t: tps[t].get(seg), k,
+                                 dead.get(seg))
             return (seg, d, sc)
 
+        segs = _program_segments(prog, lambda t: tps[t].keys())
         parts = [p for p in self._map_segments(
                      sorted(segs), one, self._work_estimate(terms))
                  if len(p[1])]
@@ -1143,260 +1144,6 @@ class ServingSearcher(Bm25StatsMixin):
 
         parts = [p for p in self._map_segments(
                      sorted(segs), one, self._work_estimate(terms))
-                 if len(p[1])]
-        return self._merge_topk(parts, k)
-
-    def _search_phrase_prefix(self, q: L.PhrasePrefixQuery, boost: float,
-                              k: int) -> pd.DataFrame:
-        """In-process twin of the phrase-prefix program of
-        Searcher._batch_program: weight sums the FIXED
-        terms' idfs only (phrase_prefix_query.rs:116); the last slot is a
-        union of the prefix expansions."""
-        if not self.cfg.positions:
-            raise ValueError("index has no positions (record option)")
-        fixed = list(q.phrase_terms[:-1])
-        expansions = self.expand_prefix(q.phrase_terms[-1], q.max_expansions)
-        if not expansions:
-            return self._merge_topk([], k)
-        self.load_terms(sorted(set(fixed) | set(expansions)),
-                        with_positions=True)
-        if fixed:
-            dfs = self.doc_freqs(sorted(set(fixed)))
-            if any(dfs[t] <= 0 for t in fixed):
-                return self._merge_topk([], k)
-            weight = Bm25Weight.for_terms(
-                [dfs[t] for t in fixed], self.total_docs,
-                self.total_tokens_for(fixed[0]), self.params_for(fixed[0]),
-            ).boost_by(boost)
-        else:
-            weight = Bm25Weight.for_terms(
-                [1], self.total_docs, self.total_tokens, self.params,
-            ).boost_by(boost)
-        segs: set[int] = set(self._live)
-        for t in fixed:
-            segs &= set(self._tp.get(t, {}))
-        dead = self._dead_by_segment()
-
-        def one(seg: int):
-            alts = [self._tp[t][seg] for t in expansions
-                    if seg in self._tp.get(t, {})]
-            d, sc = K.segment_topk_phrase(
-                [self._tp[t].get(seg) for t in fixed] + [None], weight, k,
-                last_alternatives=alts, dead=dead.get(seg))
-            return (seg, d, sc)
-
-        parts = [p for p in self._map_segments(
-                     sorted(segs), one,
-                     self._work_estimate(fixed + expansions))
-                 if len(p[1])]
-        return self._merge_topk(parts, k)
-
-    def _search_phrase(self, phrase: L.PhraseQuery, boost: float,
-                       k: int) -> pd.DataFrame:
-        if not self.cfg.positions:
-            raise ValueError("index has no positions (record option)")
-        slots = list(phrase.phrase_terms)
-        self.load_terms(sorted(set(slots)), with_positions=True)
-        weight = self._phrase_weight(phrase, boost)
-        if weight is None:
-            return self._merge_topk([], k)
-        segs = set(self._tp[slots[0]])
-        for t in slots[1:]:
-            segs &= set(self._tp[t])
-        dead = self._dead_by_segment()
-
-        def one(seg: int):
-            d, sc = K.segment_topk_phrase(
-                [self._tp[t].get(seg) for t in slots], weight, k,
-                slop=phrase.slop, dead=dead.get(seg))
-            return (seg, d, sc)
-
-        parts = [p for p in self._map_segments(
-                     sorted(segs), one, self._work_estimate(slots))
-                 if len(p[1])]
-        return self._merge_topk(parts, k)
-
-    def _search_regex_phrase(self, q: L.RegexPhraseQuery, boost: float,
-                             k: int) -> pd.DataFrame:
-        """In-process twin of the regex-phrase program of
-        Searcher._batch_program: per-slot regex
-        expansion, alternatives-aware phrase kernel; weight over the RAW
-        pattern terms (df typically 0 -> max idf constant)."""
-        if not self.cfg.positions:
-            raise ValueError("index has no positions (record option)")
-        slot_terms: list[list[str]] = []
-        for pat in q.patterns:
-            exp = self.expand_regex(pat, max_expansions=q.max_expansions)
-            if not exp:
-                return self._merge_topk([], k)
-            slot_terms.append(exp)
-        pattern_dfs = self.doc_freqs(sorted(set(q.patterns)))
-        weight = Bm25Weight.for_terms(
-            [pattern_dfs[p] for p in q.patterns],
-            self.total_docs, self.total_tokens, self.params,
-        ).boost_by(boost)
-        all_terms = sorted({t for alt in slot_terms for t in alt})
-        self.load_terms(all_terms, with_positions=True)
-        # a segment can match only if every slot has an alternative there
-        segs: set[int] | None = None
-        for alt in slot_terms:
-            s = {seg for t in alt for seg in self._tp.get(t, {})}
-            segs = s if segs is None else segs & s
-        dead = self._dead_by_segment()
-
-        def one(seg: int):
-            slots = [
-                [self._tp[t][seg] for t in alt
-                 if seg in self._tp.get(t, {})] or None
-                for alt in slot_terms
-            ]
-            d, sc = K.segment_topk_phrase(slots, weight, k,
-                                          dead=dead.get(seg))
-            return (seg, d, sc)
-
-        parts = [p for p in self._map_segments(
-                     sorted(segs or set()), one,
-                     self._work_estimate(all_terms))
-                 if len(p[1])]
-        return self._merge_topk(parts, k)
-
-    def _search_mixed(self, mixed, k: int) -> pd.DataFrame:
-        """In-process twin of the mixed "bool" program of
-        Searcher._batch_program: flat booleans mixing term and
-        phrase clauses on the f32 kernel — each phrase evaluated into a
-        virtual ArrayPostings clause (PhraseScorer composing inside
-        BooleanWeight, boolean_weight.rs)."""
-        clauses, msm = mixed
-        # term tombstones are excluded by the per-segment dead sets
-        term_set = {p for _, kind, p, _ in clauses if kind == "term"}
-        phrase_terms = {
-            t for _, kind, p, _ in clauses if kind == "phrase"
-            for t in p.phrase_terms
-        }
-        if phrase_terms and not self.cfg.positions:
-            raise ValueError("index has no positions (record option)")
-        all_terms = sorted(term_set | phrase_terms)
-        dfs = self.doc_freqs(all_terms)
-        self.load_terms(sorted(phrase_terms), with_positions=True)
-
-        runner_spec = []
-        for occur, kind, payload, b in clauses:
-            if kind == "term":
-                w = self.weight_for(dfs[payload], b, payload)
-                runner_spec.append((occur, "term", payload, w))
-            else:
-                w = self._phrase_weight(payload, b)
-                if w is None:
-                    if occur == "must":
-                        return self._merge_topk([], k)
-                    continue  # should/must_not no-op
-                runner_spec.append(
-                    (occur, "phrase",
-                     (tuple(payload.phrase_terms), payload.slop), w))
-        if not any(o != "must_not" for o, *_ in runner_spec):
-            return self._merge_topk([], k)
-
-        # candidate segments: any positive clause can match there
-        segs: set[int] = set()
-        for occur, kind, payload, _ in runner_spec:
-            if occur == "must_not":
-                continue
-            if kind == "term":
-                segs |= set(self._tp.get(payload, {}))
-            else:
-                s: set[int] | None = None
-                for t in payload[0]:
-                    ts = set(self._tp.get(t, {}))
-                    s = ts if s is None else s & ts
-                segs |= s or set()
-        dead = self._dead_by_segment()
-
-        def one(seg: int):
-            cl = []
-            for occur, kind, payload, w in runner_spec:
-                if kind == "term":
-                    cl.append(K.Clause(occur, payload, w,
-                                       self._tp.get(payload, {}).get(seg)))
-                else:
-                    slots, slop = payload
-                    cand, counts, fns = K.phrase_match_arrays(
-                        [self._tp.get(t, {}).get(seg) for t in slots],
-                        slop=slop)
-                    ap = (K.ArrayPostings(cand, counts, fns)
-                          if len(cand) else None)
-                    cl.append(K.Clause(occur, " ".join(slots), w, ap))
-            d, sc = K.segment_topk(cl, k, msm, None, dead=dead.get(seg))
-            return (seg, d, sc)
-
-        parts = [p for p in self._map_segments(
-                     sorted(segs), one, self._work_estimate(all_terms))
-                 if len(p[1])]
-        return self._merge_topk(parts, k)
-
-    def _search_mixed_dismax(self, mixed, k: int) -> pd.DataFrame:
-        """In-process twin of the mixed "dismax" program of
-        Searcher._batch_program: DisjunctionMax over
-        term + phrase arms on the f32 kernel."""
-        arms, tie_breaker, top_boost = mixed
-        term_set = {p for kind, p, _ in arms if kind == "term"}
-        phrase_terms = {
-            t for kind, p, _ in arms if kind == "phrase"
-            for t in p.phrase_terms
-        }
-        if phrase_terms and not self.cfg.positions:
-            raise ValueError("index has no positions (record option)")
-        all_terms = sorted(term_set | phrase_terms)
-        dfs = self.doc_freqs(all_terms)
-        self.load_terms(sorted(phrase_terms), with_positions=True)
-        runner_spec = []
-        for kind, payload, b in arms:
-            if kind == "term":
-                runner_spec.append(
-                    ("term", payload, self.weight_for(dfs[payload], b,
-                                                      payload)))
-            else:
-                w = self._phrase_weight(payload, b)
-                if w is None:
-                    continue  # arm matches nothing anywhere
-                runner_spec.append(
-                    ("phrase", (tuple(payload.phrase_terms), payload.slop),
-                     w))
-        if not runner_spec:
-            return self._merge_topk([], k)
-        segs: set[int] = set()
-        for kind, payload, _ in runner_spec:
-            if kind == "term":
-                segs |= set(self._tp.get(payload, {}))
-            else:
-                s: set[int] | None = None
-                for t in payload[0]:
-                    ts = set(self._tp.get(t, {}))
-                    s = ts if s is None else s & ts
-                segs |= s or set()
-        dead = self._dead_by_segment()
-
-        def one(seg: int):
-            cl = []
-            for kind, payload, w in runner_spec:
-                if kind == "term":
-                    cl.append(K.Clause("should", payload, w,
-                                       self._tp.get(payload, {}).get(seg)))
-                else:
-                    slots, slop = payload
-                    cand, counts, fns = K.phrase_match_arrays(
-                        [self._tp.get(t, {}).get(seg) for t in slots],
-                        slop=slop)
-                    ap = (K.ArrayPostings(cand, counts, fns)
-                          if len(cand) else None)
-                    cl.append(K.Clause("should", " ".join(slots), w, ap))
-            d, sc = K.segment_topk_dismax(cl, tie_breaker, k,
-                                          dead=dead.get(seg))
-            if top_boost != 1.0:
-                sc = (sc * _F32(top_boost)).astype(_F32)
-            return (seg, d, sc)
-
-        parts = [p for p in self._map_segments(
-                     sorted(segs), one, self._work_estimate(all_terms))
                  if len(p[1])]
         return self._merge_topk(parts, k)
 

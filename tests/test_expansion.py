@@ -527,6 +527,30 @@ def test_expansion_results_unchanged_after_terms_table(exp_index):
     ]
 
 
+def test_expand_prefix_driver_read_matches_terms_scan(spark, tmp_root):
+    """`expand_prefix` reads the terms table on the driver; its result
+    is the Spark scan's `startswith` + `orderBy("term")` + limit, also
+    for non-ASCII terms (UTF-8 byte order is code-point order)."""
+    from pyspark.sql import functions as F
+
+    pdf = pd.DataFrame({
+        "conv_id": [f"c{i}" for i in range(4)],
+        "turn_idx": [0] * 4,
+        "text": ["éclair ébène eagle zèbre", "zebra zéro zulu",
+                 "ébauche eel", "zz ζήτα zeta"],
+    })
+    idx = f"{tmp_root}/exp_prefix_idx"
+    build_index(spark, spark.createDataFrame(pdf), idx,
+                IndexConfig(n_segments=3, n_term_buckets=2))
+    s = Searcher(spark, idx)
+    for prefix in ("", "e", "é", "z", "zé", "ζ", "absent"):
+        for cap in (1, 2, 50):
+            want = [r["term"] for r in s._expansion_terms()
+                    .filter(F.col("term").startswith(prefix))
+                    .orderBy("term").limit(cap).collect()]
+            assert s.expand_prefix(prefix, cap) == want, (prefix, cap)
+
+
 def test_expand_regex_bounded(exp_index):
     """max_expansions keeps the driver collect bounded: first N matches in
     term order (TakeOrderedAndProject), None = exact unbounded expansion."""

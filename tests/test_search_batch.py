@@ -5,8 +5,13 @@ For every query in the batch, the batched path must return BIT-IDENTICAL
 `ServingSearcher.search` over the same index: same per-segment kernels,
 same weights, same (score desc, segment_ord, doc_id) tie-break.
 `search_batch` and per-query `search` share one executor
-(`Searcher._run_programs`), so the serving reader is the independent
-reference for both.  This is the serving-throughput primitive: per-query
+(`Searcher._run_programs`), and both engines share the query compiler
+(`compile_program`) and the per-segment evaluator (`eval_program`), so
+the serving reader is not an independent reference: the comparison pins
+the two postings loaders, tombstone sources, top-k merges and expansion
+engines.  The independent references are the TAAT float64 path, the
+DuckDB oracle, the golden f32 fixtures and the brute-force kernel tests
+(tests/test_kernel.py).  This is the serving-throughput primitive: per-query
 driver scheduling is a fixed serial cost that caps throughput scaling no
 matter how many executors exist (measured: 16-query batch at
 4-in-flight scaled 2->8 cores at 0.545; batched, the same workload

@@ -10,10 +10,15 @@ table.  The hits must stay bit-equal to the in-process
 `ServingSearcher.search` and carry the same key columns, with and
 without pending term and address tombstones.
 
-Regex-phrase and phrase-prefix queries first expand their patterns
-against the term dictionary, which is a Spark scan of the terms table
-of its own (`expand_regex` / `expand_prefix`); those jobs are counted
-separately and allowed on top of the one query job.
+Regex-phrase queries first expand their patterns against the term
+dictionary with a Spark scan of the terms table (`expand_regex`: Java's
+`(?U)` regex is the reference semantics); those jobs are counted
+separately and allowed on top of the one query job.  Phrase-prefix
+expansion (`expand_prefix`) is a driver read, so a phrase-prefix query
+is one job in total.
+
+A phrase-family query on an index built without positions is refused
+with a named ValueError by both engines before any work: no Spark job.
 """
 
 import shutil
@@ -69,13 +74,11 @@ def _jobs(spark, group: str, fn):
 
 
 def _expansion_jobs(spark, s: Searcher, q, group: str) -> int:
-    """Spark jobs of the term-dictionary expansions `q` runs."""
+    """Spark jobs of the regex expansions `q` runs."""
     def expand():
         if isinstance(q, L.RegexPhraseQuery):
             for pat in q.patterns:
                 s.expand_regex(pat, max_expansions=q.max_expansions)
-        elif isinstance(q, L.PhrasePrefixQuery):
-            s.expand_prefix(q.phrase_terms[-1], q.max_expansions)
     return _jobs(spark, group, expand)[1]
 
 
@@ -118,3 +121,33 @@ def test_one_job_per_query_with_tombstones(spark, built, tmp_root):
     delete_by_address(
         spark, idx, [(r["segment_ord"], r["doc_id"]) for r in victims])
     _check(spark, idx, "deletes")
+
+
+NO_POSITIONS = {
+    "phrase": L.PhraseQuery(("w0", "w1")),
+    "boosted_phrase": L.BoostQuery(L.PhraseQuery(("w0", "w1")), 2.0),
+    "regex_phrase": L.RegexPhraseQuery(("w0", "w[12]")),
+    "phrase_prefix": L.PhrasePrefixQuery(("w0", "w1")),
+    "mixed": QUERIES["mixed"],
+    "mixed_dismax": L.DisjunctionMaxQuery(
+        (L.PhraseQuery(("w0", "w1")), L.TermQuery("w5")), 0.3),
+}
+
+
+def test_phrase_without_positions_raises(spark, tmp_root):
+    idx = f"{tmp_root}/jobs_nopos_{time.time_ns()}"
+    build_index(spark, spark.createDataFrame(transcripts_pdf(60)), idx,
+                IndexConfig(n_segments=2, n_term_buckets=2))
+    s = Searcher(spark, idx)
+    srv = ServingSearcher(idx)
+    for name, q in NO_POSITIONS.items():
+        group = f"nopos_{name}_{time.time_ns()}"
+
+        def run():
+            with pytest.raises(ValueError, match="no positions"):
+                s.search(q, K).collect()
+        assert _jobs(spark, group, run)[1] == 0, name
+        with pytest.raises(ValueError, match="no positions"):
+            s.search_batch([q], K)
+        with pytest.raises(ValueError, match="no positions"):
+            srv.search(q, K)

@@ -2,8 +2,11 @@
 
 The serving path must return BIT-IDENTICAL (segment_ord, doc_id, f32
 score) top-k to the distributed Searcher's DAAT path over the same index
-directory: same kernels, same Bm25StatsMixin weight math, same tie-break
-(score desc, (segment_ord, doc_id) asc).  This pins the reference's
+directory, same tie-break (score desc, (segment_ord, doc_id) asc).  Both
+engines compile kernel-family queries with `compile_program` and run
+each segment through `eval_program`, so these tests pin what still
+differs: the postings loaders, the tombstone sources, the top-k merges
+and the expansion engines.  This pins the reference's
 reader/writer split (src/reader/mod.rs: a Searcher over a pinned manifest
 serves queries in-process while writers publish new snapshots).
 """
